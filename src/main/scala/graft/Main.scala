@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * `extract` is resumable: rerunning after a failure skips buckets whose
   * checkpoint manifests are committed (TranscriptTable). `maxConcurrent`
-  * (default 8) overlaps bucket jobs from a bounded driver pool — the
-  * fixed per-bucket job overhead (~0.2-0.3 s) otherwise serializes at
-  * small bucket sizes (BENCH/BASELINE.md, checkpoint section).
+  * (default 8) overlaps bucket jobs from a bounded driver pool — a bucket
+  * job's fixed cost (see TranscriptTable.extractWithCheckpoints) otherwise
+  * serializes at small bucket sizes.
   */
 object Main {
   def main(args: Array[String]): Unit = {

@@ -96,7 +96,7 @@ object StreamingExtract {
     */
   def statePartitionsFor(spark: SparkSession, inputDir: String,
       bytesPerPartition: Long = 32L << 20): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse {
+    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(parseStatePartitions).getOrElse {
       val bytes =
         try {
           val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(inputDir))
@@ -110,6 +110,11 @@ object StreamingExtract {
       val derived = math.max(1L, (bytes + bytesPerPartition - 1) / bytesPerPartition)
       math.min(derived, spark.sparkContext.defaultParallelism.toLong * 4).toInt
     }
+
+  /** `SPARK_GRAFT_STREAM_PARTITIONS`: an integer >= 1, or a named error */
+  def parseStatePartitions(raw: String): Int =
+    raw.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_STREAM_PARTITIONS must be an integer >= 1, got '$raw'"))
 
   /** Run `body` (a streaming-query start + await) with
     * spark.sql.shuffle.partitions pinned to `n`, restoring the session

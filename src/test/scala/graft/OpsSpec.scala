@@ -528,6 +528,12 @@ class OpsSpec extends AnyFunSuite {
       bytesPerPartition = 1L) == cap)
     // unreadable dir degrades to 1, never throws
     assert(StreamingExtract.statePartitionsFor(sp, "/no/such/dir") == 1)
+    // the env override is a positive integer or a named error
+    assert(StreamingExtract.parseStatePartitions(" 6 ") == 6)
+    Seq("lots", "", "0", "-3", "2.5").foreach { raw =>
+      val err = intercept[IllegalArgumentException](StreamingExtract.parseStatePartitions(raw))
+      assert(err.getMessage.contains("SPARK_GRAFT_STREAM_PARTITIONS"), err.getMessage)
+    }
     // withStatePartitions pins and restores the session conf
     val key = "spark.sql.shuffle.partitions"
     val prev = sp.conf.get(key)
