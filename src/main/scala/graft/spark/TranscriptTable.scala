@@ -226,6 +226,23 @@ object TranscriptTable {
       Json.write(Obj.of("current_snapshot_id" -> Num(snapshotId.toDouble))))
   }
 
+  /** The table's one parquet write: overwrite `dir` with `df`, through
+    * [[LocalFs]] for `file:` paths (no `chmod` process per file or dir).
+    * Table data is partitioned by `bucket`, in CPU-sized row groups: a
+    * parquet file only splits at ROW-GROUP boundaries, so with the 128 MB
+    * default one skew-heavy bucket file is ONE scan task no matter what
+    * maxPartitionBytes says — measured 2.6x (salted) / 7.1x (unsalted)
+    * wall vs a uniform layout on the 50x-skew corpus (graft.ScalingSkew).
+    * 4 MiB groups restore byte-range parallelism inside big files; see
+    * BENCH/BASELINE.md.
+    */
+  private def writeParquet(df: DataFrame, dir: String, byBucket: Boolean = true): Unit = {
+    val w = df.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
+    if (byBucket)
+      w.option("parquet.block.size", (4 * 1024 * 1024).toString).partitionBy("bucket").parquet(dir)
+    else w.parquet(dir)
+  }
+
   /** Write a conv_id-bucketed table + snapshot metadata.
     *
     * `filesPerBucket` splits each bucket into several parquet files. HOW
@@ -263,18 +280,8 @@ object TranscriptTable {
         .repartitionByRange(nBuckets * filesPerBucket, col("bucket"), col("conv_id"))
       case other => sys.error(s"unknown layout '$other' (salted | range)")
     }
-    split
-      .sortWithinPartitions("conv_id", "turn_idx") // stable order within files
-      .write.mode(SaveMode.Overwrite)
-      // CPU-sized row groups: a parquet file only splits at ROW-GROUP
-      // boundaries, so with the 128 MB default one skew-heavy bucket file
-      // is ONE scan task no matter what maxPartitionBytes says — measured
-      // 2.6x (salted) / 7.1x (unsalted) wall vs a uniform layout on the
-      // 50x-skew corpus (graft.ScalingSkew). 4 MiB groups restore
-      // byte-range parallelism inside big files; see BENCH/BASELINE.md.
-      .option("parquet.block.size", (4 * 1024 * 1024).toString)
-      .partitionBy("bucket")
-      .parquet(snapDataDir(root, snapshotId))
+    writeParquet(split.sortWithinPartitions("conv_id", "turn_idx"), // stable order within files
+      snapDataDir(root, snapshotId))
     writeSnapshot(root, snapshotId, nBuckets, df.schema.json,
       withStats(root, listDataFiles(root, snapshotId)), op, parentId)
   }
@@ -302,18 +309,14 @@ object TranscriptTable {
     val nBuckets = cur("partition_spec")("n_buckets").asInt
     // total/matched counters ride the write itself (one pass, no recount)
     val obs = org.apache.spark.sql.Observation(s"graft_ow_${newSnapshotId}_b$bucket")
-    df.withColumn("bucket", bucketCol(nBuckets))
+    writeParquet(df.withColumn("bucket", bucketCol(nBuckets))
       .observe(obs, count(lit(1)).as("total"),
         coalesce(sum(when(col("bucket") === bucket, 1L).otherwise(0L)), lit(0L))
           .as("matched"))
       .filter(col("bucket") === bucket)
       .repartition(filesPerBucket,
         pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
-      .sortWithinPartitions("conv_id", "turn_idx")
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", (4 * 1024 * 1024).toString) // see write()
-      .partitionBy("bucket")
-      .parquet(snapDataDir(root, newSnapshotId))
+      .sortWithinPartitions("conv_id", "turn_idx"), snapDataDir(root, newSnapshotId))
     // emptiness check rides the OUTPUT, not the observation: partitionBy
     // writes no parquet files for zero rows, and precisely in that case AQE
     // prunes the CollectMetrics node from the final plan (empty-relation
@@ -361,14 +364,10 @@ object TranscriptTable {
     val cur = snapshotMeta(root, curId)
     requireTableSchema("append", df, cur)
     val nBuckets = cur("partition_spec")("n_buckets").asInt
-    df.withColumn("bucket", bucketCol(nBuckets))
+    writeParquet(df.withColumn("bucket", bucketCol(nBuckets))
       .repartition(nBuckets * filesPerBucket, col("bucket"),
         pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
-      .sortWithinPartitions("conv_id", "turn_idx")
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", (4 * 1024 * 1024).toString) // see write()
-      .partitionBy("bucket")
-      .parquet(snapDataDir(root, newSnapshotId))
+      .sortWithinPartitions("conv_id", "turn_idx"), snapDataDir(root, newSnapshotId))
     val newFiles = listDataFiles(root, newSnapshotId)
     if (newFiles.isEmpty) {
       // an empty append is a caller mistake, not a new snapshot; clean the
@@ -427,19 +426,26 @@ object TranscriptTable {
   /** Build a DataFrame over an explicit subset of `meta`'s manifest,
     * grouped per originating snapshot dir so the `bucket=N` partition
     * column recovers through each group's basePath. The schema is `meta`'s
-    * plus `bucket`, so no job samples parquet footers; a fully-pruned
-    * read is an empty frame with that schema, so it stays composable.
+    * plus `bucket`, so no job samples parquet footers; each scan lists at
+    * most the session's parallel-listing threshold of files, so none
+    * starts a file-listing job either. A fully-pruned read is an empty
+    * frame with that schema, so it stays composable.
     */
   private def readFiles(spark: SparkSession, root: String, meta: Json.Value,
-      files: Vector[DataFile]): DataFrame =
+      files: Vector[DataFile]): DataFrame = {
+    val perScan = math.max(1,
+      spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
     files.groupBy(f => f.path.split('/').take(2).mkString("/"))
       .toSeq.sortBy(_._1)
-      .map { case (snapRel, fs) =>
-        spark.read.schema(readSchema(meta)).option("basePath", s"$root/$snapRel")
-          .parquet(fs.map(f => s"$root/${f.path}"): _*)
+      .flatMap { case (snapRel, fs) =>
+        fs.grouped(perScan).map { chunk =>
+          spark.read.schema(readSchema(meta)).option("basePath", s"$root/$snapRel")
+            .parquet(chunk.map(f => s"$root/${f.path}"): _*)
+        }
       }
       .reduceOption(_.unionByName(_)).getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema(meta)))
+  }
 
   /** Read the table at its CURRENT snapshot. */
   def read(spark: SparkSession, root: String): DataFrame = {
@@ -505,16 +511,12 @@ object TranscriptTable {
     val deleted = if (candidates.isEmpty) 0L else {
       val isVictim = col("conv_id").isin(convIds: _*)
       val obs = org.apache.spark.sql.Observation(s"graft_del_$newSnapshotId")
-      readFiles(spark, root, cur, candidates)
+      writeParquet(readFiles(spark, root, cur, candidates)
         .observe(obs, coalesce(sum(when(isVictim, 1L).otherwise(0L)), lit(0L))
           .as("deleted"))
         .filter(!isVictim)
         .repartition(math.max(1, candidates.map(_.bucket).distinct.size), col("bucket"))
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .write.mode(SaveMode.Overwrite)
-        .option("parquet.block.size", (4 * 1024 * 1024).toString) // see write()
-        .partitionBy("bucket")
-        .parquet(snapDataDir(root, newSnapshotId))
+        .sortWithinPartitions("conv_id", "turn_idx"), snapDataDir(root, newSnapshotId))
       // an all-victim rewrite lands no rows, and AQE then prunes the
       // CollectMetrics node (the overwriteBucket lesson)
       obs.get.get("deleted").map(_.asInstanceOf[Long]).getOrElse(
@@ -730,19 +732,20 @@ object TranscriptTable {
   }
 
   /** One row per data file in a snapshot's manifest (default: current),
-    * with the per-file skipping stats [[readConvIdRange]] prunes on.
+    * with the per-file skipping stats [[readConvIdRange]] prunes on and the
+    * file length (Iceberg's `file_size_in_bytes`; null when not recorded).
     */
   def filesTable(spark: SparkSession, root: String,
       snapshotId: Option[Long] = None): DataFrame = {
     val id = snapshotId.orElse(currentSnapshotId(root)).getOrElse(
       sys.error(s"no current snapshot at $root (missing metadata/current.json)"))
+    def known(n: Long) = if (n >= 0L) Some(n) else None
     val rows = readManifest(root, id).map { f =>
-      (id, f.bucket, f.path, if (f.rows >= 0L) Some(f.rows) else None,
-        f.minConvId, f.maxConvId)
+      (id, f.bucket, f.path, known(f.rows), f.minConvId, f.maxConvId, known(f.bytes))
     }
     import spark.implicits._
     rows.toDF("snapshot_id", "bucket", "path", "row_count",
-      "min_conv_id", "max_conv_id")
+      "min_conv_id", "max_conv_id", "file_size_bytes")
   }
 
   /** The current snapshot's ancestor chain (current first), like Iceberg's
@@ -905,13 +908,12 @@ object TranscriptTable {
       // 100x scale is real money. A task that fails after writing still
       // doesn't commit: the manifest only lands after the job succeeds.
       val obs = org.apache.spark.sql.Observation(s"graft_ckpt_b$b")
-      Pipeline.extracted(in)
+      writeParquet(Pipeline.extracted(in)
         .withColumn("n_lines", size(col("ex.lines")))
         .withColumn("bytes", col("ex.bytes"))
         .observe(obs, count(lit(1)).as("turns"),
-          coalesce(sum(col("bytes")), lit(0L)).as("bytes"))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outRoot/data/bucket=$b")
+          coalesce(sum(col("bytes")), lit(0L)).as("bytes")),
+        s"$outRoot/data/bucket=$b", byBucket = false)
       val m = obs.get
       commitBucket(outRoot, b, snapshotId, nBuckets,
         Counters(m("turns").asInstanceOf[Long], m("bytes").asInstanceOf[Long], 0))

@@ -93,21 +93,26 @@ object StreamingExtract {
     * state is a bounded fraction of input for watermarked ops), clamped
     * to [1, 4x defaultParallelism]; `SPARK_GRAFT_STREAM_PARTITIONS`
     * overrides for cluster deployments that know their state size.
+    * The input is sized through its path's Hadoop filesystem (any URI the
+    * session can read); a missing input sizes as empty, and an input that
+    * cannot be sized gets defaultParallelism, with the reason on stderr.
     */
   def statePartitionsFor(spark: SparkSession, inputDir: String,
       bytesPerPartition: Long = 32L << 20): Int =
     sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(parseStatePartitions).getOrElse {
       val bytes =
         try {
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(inputDir))
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.iterator.asScala
-              .filter(p => java.nio.file.Files.isRegularFile(p))
-              .map(p => java.nio.file.Files.size(p)).sum
-          } finally walk.close()
-        } catch { case _: Exception => 0L }
-      val derived = math.max(1L, (bytes + bytesPerPartition - 1) / bytesPerPartition)
+          val path = new org.apache.hadoop.fs.Path(inputDir)
+          val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+          Some(if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L)
+        } catch {
+          case e: Exception =>
+            Console.err.println(s"[StreamingExtract] cannot size $inputDir ($e); " +
+              "using defaultParallelism state partitions")
+            None
+        }
+      val derived = bytes.fold(spark.sparkContext.defaultParallelism.toLong)(b =>
+        math.max(1L, (b + bytesPerPartition - 1) / bytesPerPartition))
       math.min(derived, spark.sparkContext.defaultParallelism.toLong * 4).toInt
     }
 

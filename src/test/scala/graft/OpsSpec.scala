@@ -526,8 +526,14 @@ class OpsSpec extends AnyFunSuite {
     val cap = sp.sparkContext.defaultParallelism * 4
     assert(StreamingExtract.statePartitionsFor(sp, dir.toString,
       bytesPerPartition = 1L) == cap)
+    // a file: URI sizes through the same filesystem as the plain path
+    assert(StreamingExtract.statePartitionsFor(sp, dir.toUri.toString,
+      bytesPerPartition = 1024L) == 10)
     // unreadable dir degrades to 1, never throws
     assert(StreamingExtract.statePartitionsFor(sp, "/no/such/dir") == 1)
+    // a filesystem that cannot be sized falls back to the session parallelism
+    assert(StreamingExtract.statePartitionsFor(sp, "nosuchfs://host/in") ==
+      sp.sparkContext.defaultParallelism)
     // the env override is a positive integer or a named error
     assert(StreamingExtract.parseStatePartitions(" 6 ") == 6)
     Seq("lots", "", "0", "-3", "2.5").foreach { raw =>

@@ -265,6 +265,24 @@ class SparkPipelineSpec extends AnyFunSuite {
     assert(TranscriptTable.read(sp, root).count() == b1.count() + b2.count())
   }
 
+  test("files table: file_size_bytes sums to the data files' on-disk lengths") {
+    val sp = spark
+    import org.apache.spark.sql.functions._
+    val root = java.nio.file.Files.createTempDirectory("graft_fsize").toString
+    TranscriptTable.write(Transcripts.synthesize(sp, 16, seed = 15L).toDF(), root,
+      nBuckets = 4, snapshotId = 1L, filesPerBucket = 2)
+    val onDisk = TranscriptTable.readManifest(root, 1L)
+      .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(root, f.path))).sum
+    val files = TranscriptTable.filesTable(sp, root)
+    assert(files.agg(sum(col("file_size_bytes"))).head().getLong(0) == onDisk)
+    // a manifest entry without a recorded length reads back as null
+    val snap = java.nio.file.Paths.get(root, "metadata", "snapshot-1.json")
+    java.nio.file.Files.writeString(snap,
+      java.nio.file.Files.readString(snap).replaceFirst("\"bytes\":[0-9.eE+]+,?", ""))
+    val sizes = TranscriptTable.filesTable(sp, root).select("file_size_bytes").collect()
+    assert(sizes.count(_.isNullAt(0)) == 1 && sizes.length == files.count())
+  }
+
   test("metadata tables: snapshots/files/history reflect lineage, stats, expiry") {
     val sp = spark
     import org.apache.spark.sql.functions._

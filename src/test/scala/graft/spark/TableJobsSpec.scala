@@ -10,7 +10,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 /** The table's Spark job budget: reads take their schema from snapshot
-  * metadata (building a frame starts no job), a checkpointed extraction
+  * metadata and list at most the parallel-listing threshold of files per
+  * scan (building a frame starts no job), a checkpointed extraction
   * with overlapped bucket jobs runs one job per bucket and writes one file
   * per small bucket, and writes that would commit a schema their rows do
   * not have are refused before any data lands.
@@ -75,14 +76,24 @@ class TableJobsSpec extends AnyFunSuite {
     TranscriptTable.append(Transcripts.synthesize(sp, 6, seed = 22L).toDF()
       .withColumn("conv_id", concat(lit("new-"), col("conv_id"))), root, newSnapshotId = 2L)
     val id = TranscriptTable.read(sp, root).select("conv_id").head().getString(0)
+    // one snapshot dir holding more files than Spark lists without a job
+    val wide = tmp("wide")
+    TranscriptTable.write(Transcripts.synthesize(sp, 120, seed = 26L).toDF(), wide,
+      nBuckets = 4, snapshotId = 1L, filesPerBucket = 16)
+    val wideFiles = TranscriptTable.readManifest(wide, 1L)
+    assert(wideFiles.size >
+      sp.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
     val (frames, jobs) = jobsOf(Seq(
       TranscriptTable.readAt(sp, root, 1L),
       TranscriptTable.read(sp, root),
       TranscriptTable.readConvIds(sp, root, Seq(id)),
       TranscriptTable.readConvIdsAt(sp, root, 1L, Seq(id)),
       TranscriptTable.readConvIdRange(sp, root, "a", "z"),
-      TranscriptTable.incrementalRead(sp, root, 1L, 2L)))
+      TranscriptTable.incrementalRead(sp, root, 1L, 2L),
+      TranscriptTable.readAt(sp, wide, 1L)))
     assert(jobs.isEmpty, s"building the frames started ${jobs.size} job(s)")
+    assert(frames(6).count() == wideFiles.map(_.rows).sum)
+    assert(frames(6).inputFiles.length == wideFiles.size)
     // the metadata schema is the one the files hold: same columns, same rows
     val inferred = sp.read.option("basePath", s"$root/data/snap-1")
       .parquet(s"$root/data/snap-1")
