@@ -50,7 +50,7 @@ COMMON=(--conf spark.ui.enabled=false
 echo "== prep: $NCONVS conversations -> $TABLE"
 "$SUBMIT" --master "local[32]" "${COMMON[@]}" \
   --conf spark.sql.shuffle.partitions=32 \
-  --class graft.ScalingPrep "$JAR" "$TABLE" "$NCONVS" 2>/dev/null | grep '^{'
+  --class graft.Main "$JAR" synth "$TABLE" "$NCONVS" 2>/dev/null | grep '^{'
 
 # per-pair CPU calibration (graft.tools.CalibProbe via plain java — no
 # Spark session): the bench protocol learned in round 5 that artifacts
@@ -70,14 +70,14 @@ for p in $(seq 1 "$PAIRS"); do
   echo "== pair $p/$PAIRS: N = 1 executor x $CORES cores"
   N_OUT=$("$SUBMIT" --master "local-cluster[1,$CORES,$MEM]" "${COMMON[@]}" \
     --conf spark.sql.shuffle.partitions=$CORES \
-    --class graft.ScalingRun "$JAR" "$TABLE" "N$p" 2>/dev/null | grep '^{')
+    --class graft.Main "$JAR" scale "$TABLE" "N$p" 2>/dev/null | grep '^{')
   echo "$N_OUT"
   N_SAMPLES+=("$N_OUT")
 
   echo "== pair $p/$PAIRS: 4N = 4 executors x $CORES cores"
   N4_OUT=$("$SUBMIT" --master "local-cluster[4,$CORES,$MEM]" "${COMMON[@]}" \
     --conf spark.sql.shuffle.partitions=$((CORES * 4)) \
-    --class graft.ScalingRun "$JAR" "$TABLE" "4N$p" 2>/dev/null | grep '^{')
+    --class graft.Main "$JAR" scale "$TABLE" "4N$p" 2>/dev/null | grep '^{')
   echo "$N4_OUT"
   N4_SAMPLES+=("$N4_OUT")
 done

@@ -1,9 +1,9 @@
 package graft
 
 import graft.ops.{Ann, Dedup, TextOps}
-import graft.spark.{Pipeline, Transcripts}
+import graft.spark.{DriverJobs, Pipeline, Transcripts}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -74,44 +74,6 @@ object SparkEntry {
     q.exception.foreach(e => throw new IllegalStateException(
       s"$name: streaming query died: ${e.getMessage}", e))
     require(finished, s"$name: streaming query did not terminate within ${timeoutMs}ms")
-  }
-
-  /** Overlap INDEPENDENT Spark actions from a small driver pool (guide
-    * §2.6): Spark schedules concurrent jobs fine, and each action here is
-    * a read-only attestation over committed files, so ordering between
-    * them is immaterial. On a cluster this backfills one job's straggler
-    * tail with the next job's tasks; on small inputs it overlaps the
-    * fixed per-job cost (planning + scheduling), which dominates there.
-    */
-  private def par2[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val (a, b) = (Future(fa), Future(fb))
-      (Await.result(a, Duration.Inf), Await.result(b, Duration.Inf))
-    } finally pool.shutdown()
-  }
-  private def par3[A, B, C](fa: => A, fb: => B, fc: => C): (A, B, C) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val (a, b, c) = (Future(fa), Future(fb), Future(fc))
-      (Await.result(a, Duration.Inf), Await.result(b, Duration.Inf),
-        Await.result(c, Duration.Inf))
-    } finally pool.shutdown()
-  }
-  private def par5[A](fs: Seq[() => A]): Seq[A] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.length)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      Await.result(Future.sequence(fs.map(f => Future(f()))), Duration.Inf)
-    } finally pool.shutdown()
   }
 
   /** transcripts scale keyed off the sf directory (deterministic, no I/O) */
@@ -809,7 +771,7 @@ object SparkEntry {
       // The oracle recomputes them from the materialized bucket mapping
       // joined with golden line counts; the wall-time flatness evidence
       // (skewed vs uniform layout at equal turns) lives in
-      // BENCH/BASELINE.md (graft.ScalingSkew).
+      // the skew-stress section of BENCH/BASELINE.md.
       val n = math.min(nConvsFor(dir), 400L)
       val nBuckets = 8
       val tmp = java.nio.file.Files.createTempDirectory("graft_q37").toString
@@ -889,13 +851,12 @@ object SparkEntry {
         .select(xxhash64(cols.map(col): _*).as("lh"))
         .agg(count(lit(1)), expr("bit_xor(lh)"))
         .head()
-      val (r1, r2, digests) = par3(
-        stats(graft.spark.TranscriptTable.readAt(s, root, 1L)),
-        stats(graft.spark.TranscriptTable.read(s, root)),
-        (bucketDigest(graft.spark.TranscriptTable.readAt(s, root, 1L)),
-          bucketDigest(graft.spark.TranscriptTable.read(s, root))))
-      require(digests._1 == digests._2,
-        s"non-overwritten buckets drifted: ${digests._1} vs ${digests._2}")
+      val Seq(r1: Row, r2: Row, (d1: Row, d2: Row)) = DriverJobs.run(3, Seq(
+        () => stats(graft.spark.TranscriptTable.readAt(s, root, 1L)),
+        () => stats(graft.spark.TranscriptTable.read(s, root)),
+        () => (bucketDigest(graft.spark.TranscriptTable.readAt(s, root, 1L)),
+          bucketDigest(graft.spark.TranscriptTable.read(s, root)))))
+      require(d1 == d2, s"non-overwritten buckets drifted: $d1 vs $d2")
       // maintenance pass: bin-pack the current snapshot into snapshot 3
       // (Iceberg rewrite_data_files) — fewer files, identical aggregates
       val filesBefore = graft.spark.TranscriptTable.readManifest(root, 2L).length
@@ -1072,7 +1033,7 @@ object SparkEntry {
       // the five window scans are independent reads of committed
       // snapshots — overlap them (guide §2.6) instead of paying five
       // sequential fixed job costs
-      val Seq(w12, w23, w13, w33, full) = par5(Seq(
+      val Seq(w12, w23, w13, w33, full) = DriverJobs.run(5, Seq(
         () => cnt(tt.incrementalRead(s, root, 1L, 2L)),
         () => cnt(tt.incrementalRead(s, root, 2L, 3L)),
         () => cnt(tt.incrementalRead(s, root, 1L, 3L)),
@@ -1125,15 +1086,17 @@ object SparkEntry {
       // history walk are independent metadata queries — overlap them
       // (guide §2.6); the per-snapshot files aggregation is ONE job over
       // the unioned files tables instead of one job per snapshot
-      val (snapRows, fileAggs, hist) = par3(
-        tt.snapshotsTable(s, root).collect().sortBy(_.getLong(0)),
-        (1L to 4L).map(id => tt.filesTable(s, root, Some(id)))
+      val Seq(snapsRaw, aggRows, hist) = DriverJobs.run(3, Seq(
+        () => tt.snapshotsTable(s, root).collect(),
+        () => (1L to 4L).map(id => tt.filesTable(s, root, Some(id)))
           .reduce(_.unionByName(_))
           .groupBy(col("snapshot_id"))
           .agg(coalesce(sum(col("row_count")), lit(0L)).as("rows"),
             count(lit(1)).as("files"))
-          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap,
-        tt.historyTable(s, root).collect())
+          .collect(),
+        () => tt.historyTable(s, root).collect()))
+      val snapRows = snapsRaw.sortBy(_.getLong(0))
+      val fileAggs = aggRows.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       require(snapRows.map(_.getLong(0)).toVector == Vector(1L, 2L, 3L, 4L),
         "snapshots table must list every live snapshot")
       // files ↔ snapshots consistency, per snapshot
@@ -1162,8 +1125,8 @@ object SparkEntry {
       tt.expireSnapshots(root, keep = Set(3L, 4L))
       require(tt.snapshotIds(root) == Vector(3L, 4L),
         "expire must drop snapshots 1 and 2")
-      val (histPost, snapsPost) = par2(
-        tt.historyTable(s, root).count(), tt.snapshotsTable(s, root).count())
+      val Seq(histPost, snapsPost) = DriverJobs.run(2, Seq(
+        () => tt.historyTable(s, root).count(), () => tt.snapshotsTable(s, root).count()))
       require(histPost == 2L, "history stops at an expired parent")
       require(snapsPost == 2L,
         "snapshots table lists only live snapshots after expire")
@@ -1218,10 +1181,11 @@ object SparkEntry {
       // (readConvIdsAt / readConvIds) instead of full-table scans —
       // pruning is conservative (stats only SKIP provably-clean files,
       // the membership filter stays on), so the counts are identical
-      val (after, victimsAt2, victimsNow) = par3(
-        cnt(tt.read(s, root)),
-        tt.readConvIdsAt(s, root, 2L, victims).count(),
-        tt.readConvIds(s, root, victims).count())
+      val Seq(after: (Long, Long) @unchecked, victimsAt2: Long, victimsNow: Long) =
+        DriverJobs.run(3, Seq(
+          () => cnt(tt.read(s, root)),
+          () => tt.readConvIdsAt(s, root, 2L, victims).count(),
+          () => tt.readConvIds(s, root, victims).count()))
       // pruning did its job: most files carried over BY REFERENCE (path
       // identity), only stat-matching candidates were rewritten
       val (cands, totalFiles) = tt.selectFilesForIds(root, 2L, victims)

@@ -15,7 +15,8 @@ import scala.collection.mutable.ArrayBuffer
   * The grammar is tiny (pdf2xml / page / fontspec / text / b / i / a), so a
   * bespoke char-stream state machine beats a general XML library: zero
   * dependencies and no DOM allocation beyond what the layout pass needs.
-  * Hot-path notes (this is ~69% of the pdfxml kernel, KernelProfile):
+  * Hot-path notes (this is ~69% of the pdfxml kernel; perfbench's traced
+  * run reports it as `kernel.xmltok_ns`):
   * text is scanned in bulk via indexOf('<'); attributes live in two small
   * parallel arrays built from a reused scratch pad (a 5-entry linear scan
   * beats a Map for both build and lookup, and allocates nothing per

@@ -246,7 +246,7 @@ object ExtractTurn {
 
   /** Direct UnsafeRow emission for the extraction output — the round-4
     * answer to the memory-bandwidth wall. Measured per mixed doc
-    * (AllocProbeSpec protocol): extract 0.21 ms, +toInternal ~0.02 ms,
+    * (round 4): extract 0.21 ms, +toInternal ~0.02 ms,
     * +UnsafeProjection re-encode of the generic tree another ~0.16 ms —
     * i.e. the downstream projection's field-by-field traversal of
     * ~70 GenericInternalRows was ~45% of the Spark-side turn cost.

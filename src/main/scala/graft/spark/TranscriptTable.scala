@@ -167,19 +167,8 @@ object TranscriptTable {
     // one shared (read-only) Configuration: constructing it per file
     // re-parses the Hadoop default XMLs a thousand times on a big commit
     val conf = new org.apache.hadoop.conf.Configuration()
-    if (files.length <= 4) files.map(f => footerStats(root, f, conf))
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, files.length))
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(
-          Future.traverse(files)(f => Future(footerStats(root, f, conf))),
-          Duration.Inf)
-      } finally pool.shutdown()
-    }
+    DriverJobs.run(if (files.length <= 4) 1 else 16,
+      files.map(f => () => footerStats(root, f, conf))).toVector
   }
 
   private def writeSnapshot(root: String, snapshotId: Long, nBuckets: Int,
@@ -232,9 +221,9 @@ object TranscriptTable {
     * parquet file only splits at ROW-GROUP boundaries, so with the 128 MB
     * default one skew-heavy bucket file is ONE scan task no matter what
     * maxPartitionBytes says — measured 2.6x (salted) / 7.1x (unsalted)
-    * wall vs a uniform layout on the 50x-skew corpus (graft.ScalingSkew).
-    * 4 MiB groups restore byte-range parallelism inside big files; see
-    * BENCH/BASELINE.md.
+    * wall vs a uniform layout on the 50x-skew corpus (the skew-stress
+    * section of BENCH/BASELINE.md). 4 MiB groups restore byte-range
+    * parallelism inside big files.
     */
   private def writeParquet(df: DataFrame, dir: String, byBucket: Boolean = true): Unit = {
     val w = df.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
@@ -919,28 +908,10 @@ object TranscriptTable {
         Counters(m("turns").asInstanceOf[Long], m("bytes").asInstanceOf[Long], 0))
       }
     }: Unit
-    if (maxConcurrent <= 1) todo.foreach(processBucket)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(maxConcurrent)
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        // Drain ALL in-flight buckets before propagating a failure: a
-        // fail-fast Await would return while straggler jobs are still
-        // writing their bucket=<b> dirs, and a caller retrying
-        // extractWithCheckpoints (the documented resume flow) could then
-        // race a fresh Overwrite against a straggler's commit. Each future
-        // is folded to Either so sequence never short-circuits; the first
-        // failure is rethrown only after every bucket job has finished.
-        val settled = Await.result(
-          Future.sequence(todo.map(b =>
-            Future(processBucket(b)).map(Right(_): Either[Throwable, Unit])
-              .recover { case t => Left(t) })),
-          Duration.Inf)
-        settled.collectFirst { case Left(t) => t }.foreach(t => throw t)
-      } finally pool.shutdown()
-    }
+    // every in-flight bucket settles before a failure propagates: a
+    // caller retrying extractWithCheckpoints (the documented resume flow)
+    // must not race a fresh Overwrite against a straggler's commit
+    DriverJobs.run(maxConcurrent, todo.map(b => () => processBucket(b)))
     readCounters(outRoot)
   }
 }

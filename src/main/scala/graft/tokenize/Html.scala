@@ -198,7 +198,7 @@ object Html {
         text.append(c); i += 1
       } else {
         // bulk text run to the next tag open (char-at-a-time appends were
-        // the Shakespeare-path hot spot — KernelProfile)
+        // the Shakespeare-path hot spot — perfbench `kernel.html_ns`)
         val lt = html.indexOf('<', i)
         val end = if (lt < 0) n else lt
         text.append(html, i, end)

@@ -54,6 +54,8 @@ object Explain {
     show("q18_extract_verify", SparkEntry.queries("q18_extract_verify")(spark, sfDir))
     show("q13_minhash_pairs", SparkEntry.queries("q13_minhash_pairs")(spark, sfDir),
       execute = true)
+    show("q14_simhash_pairs", SparkEntry.queries("q14_simhash_pairs")(spark, sfDir),
+      execute = true)
     show("q32_dual_verify", SparkEntry.queries("q32_dual_verify")(spark, sfDir))
     show("q33_revisions", SparkEntry.queries("q33_revisions")(spark, sfDir))
     show("q34_line_number_vote", SparkEntry.queries("q34_line_number_vote")(spark, sfDir))

@@ -4,9 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Byte-for-byte equivalence of the hand-written UnsafeRow emitter
   * (ExtractTurn.toInternalUnsafe) against Spark's own projection of the
-  * generic InternalRow tree. Previously only checked in the manually-run
-  * graft.spark.AllocProbe tool; this spec makes layout drift fail in
-  * every `sbt test` run (ADVICE r4). Covers mixed, dual-dialog,
+  * generic InternalRow tree, so layout drift fails in every `sbt test`
+  * run (ADVICE r4). Covers mixed, dual-dialog,
   * revision-colored and margin-numbered corpora so every optional struct
   * field is exercised, plus the giant-turn path that triggers the
   * writer-buffer reset.
