@@ -20,7 +20,29 @@ MEM="${3:-10240}"
 PAIRS="${4:-3}"
 SUBMIT=/opt/spark/bin/spark-submit
 JAR=target/scala-2.13/pdfparsertsspark_2.13-0.1.0.jar
-TABLE=$(mktemp -d /tmp/graft_scaling_XXXX)
+# one temp dir per run: the table plus one stderr log per spark-submit
+WORK=$(mktemp -d /tmp/graft_scaling_XXXX)
+TABLE="$WORK/table"
+# wall-clock bound per spark-submit: a driver whose executors cannot
+# start waits for resources forever instead of failing
+STEP_TIMEOUT=1800
+
+# submit <log name> <spark-submit args...>: prints the JSON result lines;
+# on a failure, a timeout or no result, names the log, prints its tail
+# and stops the script
+submit() {
+  local log="$WORK/$1.log"
+  shift
+  local out
+  if out=$(timeout -k 30 "$STEP_TIMEOUT" "$SUBMIT" "$@" 2>"$log") &&
+     out=$(grep '^{' <<<"$out"); then
+    echo "$out"
+  else
+    echo "spark-submit failed, timed out (${STEP_TIMEOUT}s) or printed no result; log: $log" >&2
+    tail -n 25 "$log" >&2
+    exit 1
+  fi
+}
 
 sbt -batch package >/dev/null
 
@@ -36,8 +58,10 @@ sbt -batch package >/dev/null
 # side borrows 28 idle cores for its GC pauses (+3%) — something no
 # real cluster container can do. Pinning both sides is the
 # container-faithful configuration (YARN/K8s executors GC within their
-# own cpu quota); A/B evidence in BASELINE.md.
-EXEC_OPTS="-XX:+UseParallelGC -XX:ParallelGCThreads=$CORES -XX:CICompilerCount=$CORES"
+# own cpu quota); A/B evidence in BASELINE.md. The JIT pool cannot go
+# below 2 threads with tiered compilation (a JVM given 1 does not start).
+JIT_THREADS=$(( CORES < 2 ? 2 : CORES ))
+EXEC_OPTS="-XX:+UseParallelGC -XX:ParallelGCThreads=$CORES -XX:CICompilerCount=$JIT_THREADS"
 COMMON=(--conf spark.ui.enabled=false
         --conf spark.sql.session.timeZone=UTC
         --conf spark.sql.adaptive.enabled=true
@@ -48,9 +72,9 @@ COMMON=(--conf spark.ui.enabled=false
         --driver-memory 8g)
 
 echo "== prep: $NCONVS conversations -> $TABLE"
-"$SUBMIT" --master "local[32]" "${COMMON[@]}" \
+submit prep --master "local[32]" "${COMMON[@]}" \
   --conf spark.sql.shuffle.partitions=32 \
-  --class graft.Main "$JAR" synth "$TABLE" "$NCONVS" 2>/dev/null | grep '^{'
+  --class graft.Main "$JAR" synth "$TABLE" "$NCONVS"
 
 # per-pair CPU calibration (graft.tools.CalibProbe via plain java — no
 # Spark session): the bench protocol learned in round 5 that artifacts
@@ -64,20 +88,20 @@ N_SAMPLES=()
 N4_SAMPLES=()
 CALIBS=()
 for p in $(seq 1 "$PAIRS"); do
-  CAL=$(calib32)
+  CAL=$(calib32) || { echo "CPU calibration (graft.tools.CalibProbe) failed" >&2; exit 1; }
   CALIBS+=("$CAL")
   echo "== pair $p/$PAIRS calib_32t=$CAL M iters/s"
   echo "== pair $p/$PAIRS: N = 1 executor x $CORES cores"
-  N_OUT=$("$SUBMIT" --master "local-cluster[1,$CORES,$MEM]" "${COMMON[@]}" \
+  N_OUT=$(submit "N$p" --master "local-cluster[1,$CORES,$MEM]" "${COMMON[@]}" \
     --conf spark.sql.shuffle.partitions=$CORES \
-    --class graft.Main "$JAR" scale "$TABLE" "N$p" 2>/dev/null | grep '^{')
+    --class graft.Main "$JAR" scale "$TABLE" "N$p")
   echo "$N_OUT"
   N_SAMPLES+=("$N_OUT")
 
   echo "== pair $p/$PAIRS: 4N = 4 executors x $CORES cores"
-  N4_OUT=$("$SUBMIT" --master "local-cluster[4,$CORES,$MEM]" "${COMMON[@]}" \
+  N4_OUT=$(submit "4N$p" --master "local-cluster[4,$CORES,$MEM]" "${COMMON[@]}" \
     --conf spark.sql.shuffle.partitions=$((CORES * 4)) \
-    --class graft.Main "$JAR" scale "$TABLE" "4N$p" 2>/dev/null | grep '^{')
+    --class graft.Main "$JAR" scale "$TABLE" "4N$p")
   echo "$N4_OUT"
   N4_SAMPLES+=("$N4_OUT")
 done
@@ -140,4 +164,4 @@ I/O and the shared memory bandwidth of the single test box.
 open(f"BENCH/scaling_1x{cores}_vs_4x{cores}.md","w").write(md)
 print(md)
 EOF
-rm -rf "$TABLE"
+rm -rf "$WORK"

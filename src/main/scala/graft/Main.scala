@@ -47,7 +47,7 @@ object Main {
         val maxConcurrent = if (args.length > 4) args(4).toInt else 8
         val c = TranscriptTable.extractWithCheckpoints(
           spark, tableRoot, outRoot, nBuckets, maxConcurrent)
-        println(s"""{"extract":"done","turns":${c.turns},"bytes":${c.bytes},"mismatches":${c.mismatches}}""")
+        println(s"""{"extract":"done","turns":${c.turns},"bytes":${c.bytes}}""")
       case "report" =>
         val outRoot = args(1)
         val ex = spark.read.parquet(s"$outRoot/data")

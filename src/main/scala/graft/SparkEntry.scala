@@ -1,9 +1,10 @@
 package graft
 
 import graft.ops.{Ann, Dedup, TextOps}
-import graft.spark.{DriverJobs, Pipeline, Transcripts}
+import graft.spark.{DriverJobs, Pipeline, TranscriptTable, Transcripts}
+import graft.streaming.StreamingExtract
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -63,17 +64,156 @@ object SparkEntry {
     "CASE kind WHEN 'Dialog' THEN 'Dialogue' WHEN 'Slugline' THEN 'Scene'" +
       " WHEN 'Paren' THEN 'Parens' WHEN 'Act' THEN 'New Act' ELSE kind END"
 
-  /** Await a streaming query and fail LOUDLY on timeout or stream death:
-    * the streaming queries read their parquet sinks back after this call,
-    * so a silently-partial sink would surface as an opaque oracle
-    * mismatch instead of the real harness failure.
+  /** Streaming attestation driver (q23, q23b, q30, q31, q42): the caller
+    * lands input parquet under a fresh temp dir's `in/`, and each [[run]]
+    * starts `stream` over the file-source stream of it with an AvailableNow
+    * trigger into the parquet sink `out/`. One checkpoint `ck/` spans runs,
+    * so a second run resumes. The state-store partition count is sized to
+    * the input (statePartitionsFor scaladoc): AQE cannot coalesce stateful
+    * streaming exchanges, and 32 near-empty stores paying a commit per
+    * micro-batch is pure fixed cost.
     */
-  private def awaitStream(q: org.apache.spark.sql.streaming.StreamingQuery,
-      name: String, timeoutMs: Long = 120000L): Unit = {
-    val finished = q.awaitTermination(timeoutMs)
-    q.exception.foreach(e => throw new IllegalStateException(
-      s"$name: streaming query died: ${e.getMessage}", e))
-    require(finished, s"$name: streaming query did not terminate within ${timeoutMs}ms")
+  private final class StreamDriver(s: SparkSession, name: String)(
+      stream: DataFrame => DataFrame) {
+    private val se = StreamingExtract
+    private val tmp = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+
+    def land(df: DataFrame, mode: String = "overwrite"): this.type = {
+      df.coalesce(8).write.mode(mode).parquet(s"$tmp/in")
+      this
+    }
+
+    /** Run to completion and return the input rows processed. Fails LOUDLY
+      * on timeout (2 min) or stream death: the output is read back after
+      * this call, so a silently-partial sink would surface as an opaque
+      * oracle mismatch instead of the real harness failure.
+      */
+    def run(label: String = name): Long =
+      se.withStatePartitions(s, se.statePartitionsFor(s, s"$tmp/in")) {
+        val q = se.startParquet(stream(se.readTranscripts(s, s"$tmp/in")),
+          s"$tmp/out", s"$tmp/ck")
+        val finished = q.awaitTermination(120000L)
+        q.exception.foreach(e => throw new IllegalStateException(
+          s"$label: streaming query died: ${e.getMessage}", e))
+        require(finished, s"$label: streaming query did not terminate within 120000ms")
+        q.recentProgress.map(_.numInputRows).sum
+      }
+
+    def input: DataFrame = s.read.parquet(s"$tmp/in")
+    def output: DataFrame = s.read.parquet(s"$tmp/out")
+  }
+
+  /** a corpus family's (transcripts, goldens) as DataFrames */
+  private def frames(c: Transcripts.Corpus[_, _]): (DataFrame, DataFrame) =
+    (c.rows.toDF(), c.goldens.toDF())
+
+  /** Per-turn expected line counts: every document turn of `transcripts`
+    * as (conv_id, turn_idx, `cols`..., g_lines), g_lines counted from the
+    * goldens (0 for a turn with none).
+    */
+  private def expectedLines(transcripts: DataFrame, goldens: DataFrame,
+      cols: Column*): DataFrame = {
+    val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
+      .agg(count(lit(1)).as("g_lines"))
+    transcripts.filter(Pipeline.isDocTurn)
+      .select(col("conv_id") +: col("turn_idx") +: cols: _*)
+      .join(perTurn, Seq("conv_id", "turn_idx"), "left")
+      .na.fill(0L, Seq("g_lines"))
+  }
+
+  /** Per-turn attestation shared by q32, q35, q38 and q40. Each side folds
+    * its lines to one row per (conv_id, turn_idx): bit_xor(xxhash64(
+    * line_idx, hashed fields)) and the line count (verifyByHash's
+    * contract), plus the turn-level `turnCols`, constant within a turn and
+    * read with max(). A full-outer turn join then counts n_turns and
+    * n_turns_ok (the turns whose two sides agree on all of them), followed
+    * by `totals` over the joined turns. `extractedAggs` are extra aggregates over
+    * the extracted lines (what extraction surfaced, e.g. dual flags); they
+    * come out of the same aggregation, so extract_turn appears exactly
+    * once in the plan (the audited invariant).
+    */
+  private def turnAttest(lines: DataFrame, hashed: Seq[Column], goldens: DataFrame,
+      goldenHashed: Seq[Column], turnCols: Seq[String], extractedAggs: Seq[Column],
+      totals: Column*): DataFrame = {
+    def digest(df: DataFrame, fields: Seq[Column], p: String, extra: Seq[Column]) =
+      df.withColumn("lh", xxhash64(col("line_idx") +: fields: _*))
+        .groupBy(col("conv_id"), col("turn_idx"))
+        .agg(expr("bit_xor(lh)").as(p + "h"), (count(lit(1)).as(p + "cnt") +:
+          turnCols.map(c => max(col(c)).as(p + c))) ++ extra: _*)
+    val ok = ("h" +: "cnt" +: turnCols).map(c => col(c) <=> col("g_" + c)).reduce(_ && _)
+    digest(lines, hashed, "", extractedAggs)
+      .join(digest(goldens, goldenHashed, "g_", Nil), Seq("conv_id", "turn_idx"), "full_outer")
+      .agg(count(lit(1)).as("n_turns"),
+        sum(when(ok, 1L).otherwise(0L)).cast("bigint").as("n_turns_ok") +: totals: _*)
+  }
+
+  /** The cross-feature attestation (q35, q38, q40): q32's field set plus
+    * each line's canonical revision-span and attr strings in the per-turn
+    * hash, with the turn-level revision table, side-vote table and
+    * CONTINUED flags compared alongside. Turn-level strings are carried
+    * beside the exploded lines, so extraction runs once.
+    */
+  private def crossAttest(transcripts: DataFrame, goldens: DataFrame,
+      extractedAggs: Seq[Column], totals: Column*): DataFrame = {
+    def spanStr(spans: Column, label: Column => Column): Column =
+      array_join(sort_array(transform(spans, x => concat(label(x), lit(":"),
+        x.getField("start").cast("string"), lit("-"),
+        x.getField("end").cast("string")))), "|")
+    val lines = Pipeline.explodeLines(Pipeline.extracted(transcripts),
+      col("conv_id"), col("turn_idx"), col("ex.format").as("format"),
+      array_join(transform(col("ex.revisions"),
+        (x, i) => concat_ws(":", i.cast("string"), x.getField("name"),
+          x.getField("color"))), ";").as("rev_table"),
+      array_join(transform(col("ex.line_number_sides"),
+        v => concat_ws(":", v.getField("type"), v.getField("left").cast("string"),
+          v.getField("right").cast("string"))), ";").as("votes"),
+      col("ex.scene_continued_top").as("cont_top"),
+      col("ex.scene_continued_bottom").as("cont_bottom"),
+      col("ex.scene_continued_number").as("cont_number"))
+    val hashed = Seq("kind", "text", "page_num", "given_page_num", "column",
+      "has_dual", "is_dual").map(f => col(s"line.$f")) ++ Seq(
+      spanStr(col("line.revs"), _.getField("weight").cast("string")),
+      spanStr(col("line.attrs"), _.getField("key")))
+    val goldenHashed = Seq("kind", "text", "page_num", "given_page_num", "column",
+      "has_dual", "is_dual", "revs", "attrs").map(col)
+    turnAttest(lines, hashed, goldens, goldenHashed,
+      Seq("rev_table", "votes", "cont_top", "cont_bottom", "cont_number"),
+      extractedAggs, totals: _*)
+  }
+
+  /** q29/q37: write `transcripts` as a conv_id-bucketed table, run the
+    * checkpointed extract with every bucket job overlapped (a bucket job's
+    * fixed cost — scheduling, parquet files, manifest commit — dominates
+    * small buckets, and nBuckets concurrent jobs backfill each
+    * other's tails; per-bucket manifests keep resume granularity), and
+    * aggregate the checkpointed OUTPUT per bucket. `runs` is handed the
+    * extract and checks its counters. The oracle's per-bucket expectation
+    * is golden line counts joined with the materialized bucket mapping.
+    */
+  private def checkpointAttest(s: SparkSession, name: String, transcripts: DataFrame,
+      goldens: DataFrame, nBuckets: Int)(
+      runs: (() => TranscriptTable.Counters) => Unit): DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+    TranscriptTable.write(transcripts, s"$tmp/table", nBuckets, snapshotId = 1L)
+    runs(() => TranscriptTable.extractWithCheckpoints(
+      s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = nBuckets))
+    materialize(expectedLines(transcripts, goldens,
+      TranscriptTable.bucketCol(nBuckets).as("bucket")), s"${name}_expected")
+    s.read.parquet(s"$tmp/out/data")
+      .groupBy(col("bucket").cast("bigint").as("bucket"))
+      .agg(count(lit(1)).as("n_turns"),
+        sum(col("n_lines")).cast("bigint").as("n_lines"))
+      .orderBy(col("bucket"))
+  }
+
+  /** (conv_id, turn_idx) of one input batch, tagged with its number */
+  private def tagged(df: DataFrame, batch: Int): DataFrame =
+    df.select(col("conv_id"), col("turn_idx")).withColumn("batch", lit(batch))
+
+  /** (rows, distinct conv_ids) of a table read, in one job */
+  private def rowsAndConvs(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)), countDistinct(col("conv_id"))).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** transcripts scale keyed off the sf directory (deterministic, no I/O) */
@@ -109,68 +249,20 @@ object SparkEntry {
 
 
   /** shared body of q38 (classic xref serialization) and q40 (modern
-    * ObjStm + xref-stream serialization): extract the cross-feature PDF
-    * corpus through the lexer and verify per-turn line hashes plus the
-    * doc-level fields against generator-derived goldens, counting
-    * format=='pdf' turns to pin which path produced them
+    * ObjStm + xref-stream serialization): the cross-feature attestation
+    * over the PDF corpus through the lexer, counting format=='pdf' turns
+    * to pin which path produced them
     */
   private def pdfLexerVerify(s: SparkSession, dir: String, matName: String,
       modern: Boolean): DataFrame = {
     val n = math.min(nConvsFor(dir), 150L)
-    val goldens = Transcripts.pdfGoldens(s, n).toDF()
+    val goldens = Transcripts.corpus(s, n)(Transcripts.pdfGoldensFor(9393L, _, 4)).goldens.toDF()
     materialize(goldens, matName)
-    val transcripts = Transcripts.synthesizePdf(s, n, modern = modern).toDF()
-      def spanStr(c: org.apache.spark.sql.Column, mid: String): org.apache.spark.sql.Column = array_join(sort_array(
-        transform(c, x => concat(x.getField("weight").cast("string"), lit(":"),
-          x.getField("start").cast("string"), lit(mid),
-          x.getField("end").cast("string")))), "|")
-      val lines = Pipeline.extracted(transcripts).select(
-        col("conv_id"), col("turn_idx"),
-        col("ex.format").as("format"),
-        array_join(transform(col("ex.revisions"),
-          (x, i) => concat_ws(":", i.cast("string"), x.getField("name"),
-            x.getField("color"))), ";").as("rev_table"),
-        array_join(transform(col("ex.line_number_sides"),
-          v => concat_ws(":", v.getField("type"), v.getField("left").cast("string"),
-            v.getField("right").cast("string"))), ";").as("votes"),
-        col("ex.scene_continued_top").as("cont_top"),
-        col("ex.scene_continued_bottom").as("cont_bottom"),
-        col("ex.scene_continued_number").as("cont_number"),
-        posexplode_outer(col("ex.lines")).as(Seq("line_idx", "line")))
-        .filter(col("line").isNotNull)
-      val a = lines
-        .withColumn("lh", xxhash64(col("line_idx"), col("line.kind"),
-          col("line.text"), col("line.page_num"), col("line.given_page_num"),
-          col("line.column"), col("line.has_dual"), col("line.is_dual"),
-          spanStr(col("line.revs"), "-"),
-          array_join(sort_array(transform(col("line.attrs"),
-            x => concat(x.getField("key"), lit(":"),
-              x.getField("start").cast("string"), lit("-"),
-              x.getField("end").cast("string")))), "|")))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("h"), count(lit(1)).as("cnt"),
-          max(col("rev_table")).as("rev_table"), max(col("votes")).as("votes"),
-          max(col("cont_top")).as("cont_top"),
-          max(col("cont_bottom")).as("cont_bottom"),
-          max(col("cont_number")).as("cont_number"),
-          max(when(col("format") === "pdf", 1).otherwise(0)).as("is_pdf"))
-      val b = goldens
-        .withColumn("lh", xxhash64(col("line_idx"), col("kind"), col("text"),
-          col("page_num"), col("given_page_num"), col("column"),
-          col("has_dual"), col("is_dual"), col("revs"), col("attrs")))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("g_h"), count(lit(1)).as("g_cnt"),
-          max(col("rev_table")).as("g_rev"), max(col("votes")).as("g_votes"),
-          max(col("cont_top")).as("g_ct"), max(col("cont_bottom")).as("g_cb"),
-          max(col("cont_number")).as("g_cn"))
-      a.join(b, Seq("conv_id", "turn_idx"), "full_outer")
-        .agg(count(lit(1)).as("n_turns"),
-          sum(when(col("h") <=> col("g_h") && col("cnt") <=> col("g_cnt") &&
-            col("rev_table") <=> col("g_rev") && col("votes") <=> col("g_votes") &&
-            col("cont_top") <=> col("g_ct") && col("cont_bottom") <=> col("g_cb") &&
-            col("cont_number") <=> col("g_cn"), 1L).otherwise(0L))
-            .cast("bigint").as("n_turns_ok"),
-          coalesce(sum(col("is_pdf")), lit(0)).cast("bigint").as("n_pdf_turns"))
+    val transcripts =
+      Transcripts.corpus(s, n)(Transcripts.pdfTurnsFor(9393L, _, 4, modern)).rows.toDF()
+    crossAttest(transcripts, goldens,
+      Seq(max(when(col("format") === "pdf", 1).otherwise(0)).as("is_pdf")),
+      coalesce(sum(col("is_pdf")), lit(0)).cast("bigint").as("n_pdf_turns"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -420,30 +512,14 @@ object SparkEntry {
       // row also proves the corpus actually contains duals and the
       // extractor surfaced them.
       val n = math.min(nConvsFor(dir), 200L)
-      val goldens = Transcripts.dualGoldens(s, n, seed = 4242L).toDF()
+      val (transcripts, goldens) = frames(
+        Transcripts.corpus(s, n)(Transcripts.dualTurnsFor(4242L, _, 4)))
       materialize(goldens, "q32_goldens")
-      val transcripts = Transcripts.synthesizeDual(s, n, seed = 4242L).toDF()
-      val lines = Pipeline.lines(Pipeline.extracted(transcripts))
       val dualFields = Seq("kind", "text", "page_num", "given_page_num",
-        "column", "has_dual", "is_dual")
-      def lh(df: DataFrame) =
-        xxhash64(col("line_idx") +: dualFields.map(col): _*)
-      // ONE pass over the extracted lines: the per-turn content digest
-      // (verifyByHash's shape, dual fields hashed in) and the extracted
-      // dual-flag bit come out of the same aggregation, so extract_turn
-      // appears exactly once in the plan (the audited invariant)
-      val a = lines.withColumn("lh", lh(lines))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("h"), count(lit(1)).as("cnt"),
-          max(when(col("has_dual"), 1).otherwise(0)).as("hd"))
-      val b = goldens.withColumn("lh", lh(goldens))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("g_h"), count(lit(1)).as("g_cnt"))
-      a.join(b, Seq("conv_id", "turn_idx"), "full_outer")
-        .agg(count(lit(1)).as("n_turns"),
-          sum(when(col("h") <=> col("g_h") && col("cnt") <=> col("g_cnt"), 1L)
-            .otherwise(0L)).cast("bigint").as("n_turns_ok"),
-          coalesce(sum(col("hd")), lit(0)).cast("bigint").as("n_dual_turns"))
+        "column", "has_dual", "is_dual").map(col)
+      turnAttest(Pipeline.lines(Pipeline.extracted(transcripts)), dualFields,
+        goldens, dualFields, Nil, Seq(max(when(col("has_dual"), 1).otherwise(0)).as("hd")),
+        coalesce(sum(col("hd")), lit(0)).cast("bigint").as("n_dual_turns"))
     }),
     "q33_revisions" -> ((s, dir) => {
       // A4/A5 driver attestation: colored-revision corpus. The goldens
@@ -454,19 +530,17 @@ object SparkEntry {
       // spans resolved through it. A wrong key binding, a mis-ordered
       // weight list, or a dropped/misattributed span is a red row.
       val n = math.min(nConvsFor(dir), 200L)
-      val goldens = Transcripts.revGoldens(s, n, seed = 777L).toDF()
+      val (transcripts, goldens) = frames(
+        Transcripts.corpus(s, n)(Transcripts.revTurnsFor(777L, _, 4)))
       materialize(goldens, "q33_goldens")
-      val transcripts = Transcripts.synthesizeRev(s, n, seed = 777L).toDF()
       // ONE extraction pass: each line's revision spans resolve through
       // the turn-level weight-ordered list (rank w -> ex.revisions[w]),
       // carried alongside the exploded lines, so a mis-permuted weight
       // list mis-names spans and reds the row. Every generated revision
       // has >= 1 span by corpus construction (its key page has a colored
       // Dialog), so span rows cover the whole expected list.
-      Pipeline.extracted(transcripts)
-        .select(col("conv_id"), col("turn_idx"), col("ex.revisions").as("revtab"),
-          posexplode_outer(col("ex.lines")).as(Seq("line_idx", "line")))
-        .filter(col("line").isNotNull)
+      Pipeline.explodeLines(Pipeline.extracted(transcripts),
+          col("conv_id"), col("turn_idx"), col("ex.revisions").as("revtab"))
         .select(col("conv_id"), col("turn_idx"), col("revtab"),
           explode_outer(col("line.revs")).as("rv"))
         .filter(col("rv").isNotNull)
@@ -490,9 +564,9 @@ object SparkEntry {
       // tokens is pinned by LineNumberVoteSpec; a wrong capture or vote
       // here is a red row.
       val n = math.min(nConvsFor(dir), 200L)
-      val goldens = Transcripts.numberedGoldens(s, n, seed = 555L).toDF()
+      val (transcripts, goldens) = frames(
+        Transcripts.corpus(s, n)(Transcripts.numberedTurnsFor(555L, _, 4)))
       materialize(goldens, "q34_goldens")
-      val transcripts = Transcripts.synthesizeNumbered(s, n, seed = 555L).toDF()
       Pipeline.extracted(transcripts)
         .select(col("conv_id"), col("turn_idx"),
           explode_outer(col("ex.line_number_sides")).as("v"))
@@ -519,68 +593,16 @@ object SparkEntry {
       // them. ONE extraction pass (the audited invariant): turn-level
       // strings are carried alongside the exploded lines.
       val n = math.min(nConvsFor(dir), 200L)
-      val goldens = Transcripts.crossGoldens(s, n).toDF()
+      val (transcripts, goldens) = frames(
+        Transcripts.corpus(s, n)(Transcripts.crossTurnsFor(3131L, _, 4)))
       materialize(goldens, "q35_goldens")
-      val transcripts = Transcripts.synthesizeCross(s, n).toDF()
-      def spanStr(c: org.apache.spark.sql.Column, mid: String): org.apache.spark.sql.Column = array_join(sort_array(
-        transform(c, x => concat(x.getField("weight").cast("string"), lit(":"),
-          x.getField("start").cast("string"), lit(mid),
-          x.getField("end").cast("string")))), "|")
-      val lines = Pipeline.extracted(transcripts).select(
-        col("conv_id"), col("turn_idx"),
-        array_join(transform(col("ex.revisions"),
-          (x, i) => concat_ws(":", i.cast("string"), x.getField("name"),
-            x.getField("color"))), ";").as("rev_table"),
-        array_join(transform(col("ex.line_number_sides"),
-          v => concat_ws(":", v.getField("type"), v.getField("left").cast("string"),
-            v.getField("right").cast("string"))), ";").as("votes"),
-        col("ex.scene_continued_top").as("cont_top"),
-        col("ex.scene_continued_bottom").as("cont_bottom"),
-        col("ex.scene_continued_number").as("cont_number"),
-        // posexplode_OUTER: the non-outer variant lets
-        // InferFiltersFromGenerate push `size(extract_turn(..).lines) > 0`
-        // below the projection, duplicating the extraction (see
-        // Pipeline.lines); every assistant doc has lines, so the
-        // null-filter restores exact semantics
-        posexplode_outer(col("ex.lines")).as(Seq("line_idx", "line")))
-        .filter(col("line").isNotNull)
-      val a = lines
-        .withColumn("lh", xxhash64(col("line_idx"), col("line.kind"),
-          col("line.text"), col("line.page_num"), col("line.given_page_num"),
-          col("line.column"), col("line.has_dual"), col("line.is_dual"),
-          spanStr(col("line.revs"), "-"),
-          array_join(sort_array(transform(col("line.attrs"),
-            x => concat(x.getField("key"), lit(":"),
-              x.getField("start").cast("string"), lit("-"),
-              x.getField("end").cast("string")))), "|")))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("h"), count(lit(1)).as("cnt"),
-          max(col("rev_table")).as("rev_table"), max(col("votes")).as("votes"),
-          max(col("cont_top")).as("cont_top"),
-          max(col("cont_bottom")).as("cont_bottom"),
-          max(col("cont_number")).as("cont_number"),
-          max(when(col("line.has_dual"), 1).otherwise(0)).as("hd"))
-      val b = goldens
-        .withColumn("lh", xxhash64(col("line_idx"), col("kind"), col("text"),
-          col("page_num"), col("given_page_num"), col("column"),
-          col("has_dual"), col("is_dual"), col("revs"), col("attrs")))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("g_h"), count(lit(1)).as("g_cnt"),
-          max(col("rev_table")).as("g_rev"), max(col("votes")).as("g_votes"),
-          max(col("cont_top")).as("g_ct"), max(col("cont_bottom")).as("g_cb"),
-          max(col("cont_number")).as("g_cn"))
-      a.join(b, Seq("conv_id", "turn_idx"), "full_outer")
-        .agg(count(lit(1)).as("n_turns"),
-          sum(when(col("h") <=> col("g_h") && col("cnt") <=> col("g_cnt") &&
-            col("rev_table") <=> col("g_rev") && col("votes") <=> col("g_votes") &&
-            col("cont_top") <=> col("g_ct") && col("cont_bottom") <=> col("g_cb") &&
-            col("cont_number") <=> col("g_cn"), 1L).otherwise(0L))
-            .cast("bigint").as("n_turns_ok"),
-          coalesce(sum(col("hd")), lit(0)).cast("bigint").as("n_dual_turns"),
-          coalesce(sum(when(length(col("rev_table")) > 0, 1).otherwise(0)), lit(0))
-            .cast("bigint").as("n_rev_turns"),
-          coalesce(sum(when(col("cont_top"), 1).otherwise(0)), lit(0))
-            .cast("bigint").as("n_cont_turns"))
+      crossAttest(transcripts, goldens,
+        Seq(max(when(col("line.has_dual"), 1).otherwise(0)).as("hd")),
+        coalesce(sum(col("hd")), lit(0)).cast("bigint").as("n_dual_turns"),
+        coalesce(sum(when(length(col("rev_table")) > 0, 1).otherwise(0)), lit(0))
+          .cast("bigint").as("n_rev_turns"),
+        coalesce(sum(when(col("cont_top"), 1).otherwise(0)), lit(0))
+          .cast("bigint").as("n_cont_turns"))
     }),
     "q38_pdf_lexer" -> ((s, dir) =>
       // Raw-PDF lexer attestation: the SAME cross-feature document family
@@ -613,9 +635,8 @@ object SparkEntry {
       // hash over (block_idx, text) of the extracted content blocks must
       // match the goldens for every document.
       val n = nConvsFor(dir) * 5
-      val goldens = Transcripts.noisyHtmlGoldens(s, n).toDF()
+      val (docs, goldens) = frames(Transcripts.corpus(s, n)(Transcripts.noisyHtmlFor(2718L, _)))
       materialize(goldens, "q39_goldens")
-      val docs = Transcripts.synthesizeNoisyHtml(s, n).toDF()
       val a = docs.select(col("doc_id"),
           posexplode_outer(graft.ops.Boilerplate.htmlMainContent(col("html")))
             .as(Seq("block_idx", "text")))
@@ -690,34 +711,12 @@ object SparkEntry {
       // oracle recomputes per-bucket expectations from golden line counts
       // joined with the materialized bucket mapping.
       val n = nConvsFor(dir)
-      val nBuckets = 16
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q29").toString
-      val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
-      graft.spark.TranscriptTable.write(transcripts, s"$tmp/table", nBuckets, snapshotId = 1L)
-      // overlap every bucket job (guide §2.6): a bucket job's fixed cost
-      // (scheduling, parquet files, manifest commit) dominates small
-      // buckets, and nBuckets concurrent jobs backfill each other's tails;
-      // per-bucket manifests keep resume granularity unchanged
-      val c1 = graft.spark.TranscriptTable.extractWithCheckpoints(
-        s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = nBuckets)
-      val c2 = graft.spark.TranscriptTable.extractWithCheckpoints(
-        s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = nBuckets) // all committed
-      require(c1 == c2, s"checkpoint resume must be a no-op: $c1 vs $c2")
-      val goldens = Transcripts.goldens(s, n, seed = 42L).toDF()
-      val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("g_lines"))
-      materialize(
-        transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(col("conv_id"), col("turn_idx"),
-            graft.spark.TranscriptTable.bucketCol(nBuckets).as("bucket"))
-          .join(perTurn, Seq("conv_id", "turn_idx"), "left")
-          .na.fill(0L, Seq("g_lines")),
-        "q29_expected")
-      s.read.parquet(s"$tmp/out/data")
-        .groupBy(col("bucket").cast("bigint").as("bucket"))
-        .agg(count(lit(1)).as("n_turns"),
-          sum(col("n_lines")).cast("bigint").as("n_lines"))
-        .orderBy(col("bucket"))
+      checkpointAttest(s, "q29", Transcripts.synthesize(s, n, seed = 42L).toDF(),
+          Transcripts.goldens(s, n, seed = 42L).toDF(), nBuckets = 16) { extract =>
+        val c1 = extract()
+        val c2 = extract() // all committed
+        require(c1 == c2, s"checkpoint resume must be a no-op: $c1 vs $c2")
+      }
     }),
     "q41_data_skipping" -> ((s, dir) => {
       // File-skipping reads: write the transcripts table in the RANGE
@@ -763,7 +762,7 @@ object SparkEntry {
     "q37_skew_stress" -> ((s, dir) => {
       // Skew-stress attestation: every conversation hashing into bucket 0
       // carries 50x the turns (planted via the Spark-compatible bucket
-      // hash, Transcripts.bucketOf), so ONE bucket holds the bulk of the
+      // hash, TranscriptTable.bucketOf), so ONE bucket holds the bulk of the
       // corpus — the long-conversation skew the north rule calls out, in
       // its worst layout. The table write salts each bucket into several
       // files and extraction parallelism is per-turn, so the checkpointed
@@ -773,28 +772,11 @@ object SparkEntry {
       // (skewed vs uniform layout at equal turns) lives in
       // the skew-stress section of BENCH/BASELINE.md.
       val n = math.min(nConvsFor(dir), 400L)
-      val nBuckets = 8
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q37").toString
-      val transcripts = Transcripts.synthesizeSkewed(s, n, seed = 42L, nBuckets = nBuckets).toDF()
-      graft.spark.TranscriptTable.write(transcripts, s"$tmp/table", nBuckets, snapshotId = 1L)
-      val c1 = graft.spark.TranscriptTable.extractWithCheckpoints(
-        s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = nBuckets)
-      require(c1.turns > 0, "skew corpus extracted no turns")
-      val goldens = Transcripts.skewedGoldens(s, n, seed = 42L, nBuckets = nBuckets).toDF()
-      val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("g_lines"))
-      materialize(
-        transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(col("conv_id"), col("turn_idx"),
-            graft.spark.TranscriptTable.bucketCol(nBuckets).as("bucket"))
-          .join(perTurn, Seq("conv_id", "turn_idx"), "left")
-          .na.fill(0L, Seq("g_lines")),
-        "q37_expected")
-      s.read.parquet(s"$tmp/out/data")
-        .groupBy(col("bucket").cast("bigint").as("bucket"))
-        .agg(count(lit(1)).as("n_turns"),
-          sum(col("n_lines")).cast("bigint").as("n_lines"))
-        .orderBy(col("bucket"))
+      val (transcripts, goldens) = frames(
+        Transcripts.corpus(s, n)(Transcripts.skewedTurnsFor(42L, _, 8, 8, 50)))
+      checkpointAttest(s, "q37", transcripts, goldens, nBuckets = 8) { extract =>
+        require(extract().turns > 0, "skew corpus extracted no turns")
+      }
     }),
     "q36_time_travel" -> ((s, dir) => {
       // Iceberg-style snapshot time travel: write snapshot 1, overwrite
@@ -887,32 +869,13 @@ object SparkEntry {
       // recomputes the same windows + the same cutoff rule in SQL from the
       // materialized generator-derived expectation.
       val n = math.min(nConvsFor(dir), 100L)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q23b").toString
       val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
-      transcripts.coalesce(8).write.mode("overwrite").parquet(s"$tmp/in")
-      val goldens = Transcripts.goldens(s, n, seed = 42L).toDF()
-      val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("g_lines"))
-      materialize(
-        transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(col("conv_id"), col("turn_idx"), col("ts"),
-            when(col("tool") === "pdftohtml", "pdfxml")
-              .otherwise("shakespeare").as("format"))
-          .join(perTurn, Seq("conv_id", "turn_idx"), "left")
-          .na.fill(0L, Seq("g_lines")),
-        "q23b_expected")
-      // stateful stream: size the state-store partition count to the
-      // input volume (statePartitionsFor scaladoc) — AQE cannot coalesce
-      // stateful streaming exchanges, and 32 near-empty stores paying a
-      // commit per micro-batch is pure fixed cost
-      val se = graft.streaming.StreamingExtract
-      se.withStatePartitions(s, se.statePartitionsFor(s, s"$tmp/in")) {
-        val q = se.startParquet(
-          se.windowedCounts(se.extractedStream(se.readTranscripts(s, s"$tmp/in"))),
-          s"$tmp/out", s"$tmp/ck")
-        awaitStream(q, "q23b_stream_windows_wm")
-      }
-      s.read.parquet(s"$tmp/out")
+      materialize(expectedLines(transcripts, Transcripts.goldens(s, n, seed = 42L).toDF(),
+        col("ts"), Pipeline.formatOfTool.as("format")), "q23b_expected")
+      val stream = new StreamDriver(s, "q23b")(in =>
+        StreamingExtract.windowedCounts(StreamingExtract.extractedStream(in)))
+      stream.land(transcripts).run()
+      stream.output
         .select(col("window.start").as("win_start"), col("format"),
           col("turns").cast("bigint").as("turns"),
           col("lines").cast("bigint").as("lines"))
@@ -926,28 +889,13 @@ object SparkEntry {
       // cutoff from golden-derived expectations; session line counts
       // come from extraction, so a wrong extraction is a red row.
       val n = math.min(nConvsFor(dir), 100L)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q31").toString
       val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
-      transcripts.coalesce(8).write.mode("overwrite").parquet(s"$tmp/in")
-      val goldens = Transcripts.goldens(s, n, seed = 42L).toDF()
-      val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("g_lines"))
-      materialize(
-        transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(col("conv_id"), col("turn_idx"), col("ts"))
-          .join(perTurn, Seq("conv_id", "turn_idx"), "left")
-          .na.fill(0L, Seq("g_lines")),
-        "q31_expected")
-      // stateful stream: state partitions sized to input volume (see q23b)
-      val se = graft.streaming.StreamingExtract
-      se.withStatePartitions(s, se.statePartitionsFor(s, s"$tmp/in")) {
-        val q = se.startParquet(
-          se.sessionizedStream(
-            se.extractedStream(se.readTranscripts(s, s"$tmp/in"))).toDF(),
-          s"$tmp/out", s"$tmp/ck")
-        awaitStream(q, "q31_stream_sessions")
-      }
-      s.read.parquet(s"$tmp/out")
+      materialize(expectedLines(transcripts, Transcripts.goldens(s, n, seed = 42L).toDF(),
+        col("ts")), "q31_expected")
+      val stream = new StreamDriver(s, "q31")(in =>
+        StreamingExtract.sessionizedStream(StreamingExtract.extractedStream(in)).toDF())
+      stream.land(transcripts).run()
+      stream.output
         .select(col("conv_id"), col("turns").cast("bigint").as("turns"),
           col("lines").cast("bigint").as("lines"),
           col("first_ts"), col("last_ts"))
@@ -965,34 +913,22 @@ object SparkEntry {
       // restart semantics; the oracle pins the end state (per-turn totals
       // over the WHOLE corpus from the generator goldens).
       val n = math.min(nConvsFor(dir), 100L)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q42").toString
-      val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
-      val withHalf = transcripts
+      val halves = Transcripts.synthesize(s, n, seed = 42L).toDF()
         .withColumn("half", pmod(xxhash64(col("conv_id")), lit(2)))
-      withHalf.filter(col("half") === 0).drop("half")
-        .coalesce(8).write.mode("overwrite").parquet(s"$tmp/in")
+      def half(h: Int) = halves.filter(col("half") === h).drop("half")
       materialize(Transcripts.goldens(s, n, seed = 42L).toDF()
         .groupBy(col("conv_id"), col("turn_idx"))
         .agg(count(lit(1)).as("g_lines")), "q42_expected")
-      def runOnce(label: String): Long = {
-        val q = graft.streaming.StreamingExtract.startParquet(
-          graft.streaming.StreamingExtract.extractedStream(
-            graft.streaming.StreamingExtract.readTranscripts(s, s"$tmp/in")),
-          s"$tmp/out", s"$tmp/ck")
-        awaitStream(q, label)
-        q.recentProgress.map(_.numInputRows).sum
-      }
-      val in1 = runOnce("q42_run1")
+      val stream = new StreamDriver(s, "q42")(StreamingExtract.extractedStream)
+      val in1 = stream.land(half(0)).run("q42_run1")
       // the second half lands while the query is DOWN
-      withHalf.filter(col("half") === 1).drop("half")
-        .coalesce(8).write.mode("append").parquet(s"$tmp/in")
-      val in2 = runOnce("q42_run2")
+      val in2 = stream.land(half(1), "append").run("q42_run2")
       require(in1 > 0 && in2 > 0, s"both runs must process data: $in1 / $in2")
       // total input rows from the landed files (parquet metadata count)
       // instead of re-running the generator lineage — same value
-      require(in2 < s.read.parquet(s"$tmp/in").count(),
+      require(in2 < stream.input.count(),
         s"restart reprocessed old input: $in2 rows in run 2")
-      val sink = s.read.parquet(s"$tmp/out")
+      val sink = stream.output
       val dupes = sink.groupBy(col("conv_id"), col("turn_idx"))
         .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
       require(dupes == 0L, s"$dupes turns duplicated across the restart")
@@ -1017,8 +953,6 @@ object SparkEntry {
       val b1 = Transcripts.synthesize(s, n, seed = 42L).toDF()
       val b2 = Transcripts.synthesize(s, math.max(1L, n / 2), seed = 4301L).toDF()
       val b3 = Transcripts.synthesize(s, math.max(1L, n / 4), seed = 4302L).toDF()
-      def tagged(df: org.apache.spark.sql.DataFrame, b: Int) =
-        df.select(col("conv_id"), col("turn_idx")).withColumn("batch", lit(b))
       materialize(tagged(b1, 1).unionByName(tagged(b2, 2)).unionByName(tagged(b3, 3)),
         "q43_expected")
       tt.write(b1, root, nBuckets = 8, snapshotId = 1L)
@@ -1026,19 +960,15 @@ object SparkEntry {
       // fan-out); the delta windows below then open 8 files, not 32
       tt.append(b2, root, newSnapshotId = 2L, filesPerBucket = 1)
       tt.append(b3, root, newSnapshotId = 3L, filesPerBucket = 1)
-      def cnt(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), countDistinct(col("conv_id"))).head()
-        (r.getLong(0), r.getLong(1))
-      }
       // the five window scans are independent reads of committed
       // snapshots — overlap them (guide §2.6) instead of paying five
       // sequential fixed job costs
       val Seq(w12, w23, w13, w33, full) = DriverJobs.run(5, Seq(
-        () => cnt(tt.incrementalRead(s, root, 1L, 2L)),
-        () => cnt(tt.incrementalRead(s, root, 2L, 3L)),
-        () => cnt(tt.incrementalRead(s, root, 1L, 3L)),
-        () => cnt(tt.incrementalRead(s, root, 3L, 3L)),
-        () => cnt(tt.read(s, root))))
+        () => rowsAndConvs(tt.incrementalRead(s, root, 1L, 2L)),
+        () => rowsAndConvs(tt.incrementalRead(s, root, 2L, 3L)),
+        () => rowsAndConvs(tt.incrementalRead(s, root, 1L, 3L)),
+        () => rowsAndConvs(tt.incrementalRead(s, root, 3L, 3L)),
+        () => rowsAndConvs(tt.read(s, root))))
       // snapshot 4 overwrites bucket 0 — delta scans crossing it refuse
       val bucket0 = b1.withColumn("b", tt.bucketCol(8)).filter(col("b") === 0).drop("b")
       tt.overwriteBucket(bucket0.unionByName(bucket0), root, bucket = 0,
@@ -1072,8 +1002,6 @@ object SparkEntry {
       val b1 = Transcripts.synthesize(s, n, seed = 42L).toDF()
       val b2 = Transcripts.synthesize(s, math.max(1L, n / 2), seed = 4401L).toDF()
       val b3 = Transcripts.synthesize(s, math.max(1L, n / 4), seed = 4402L).toDF()
-      def tagged(df: org.apache.spark.sql.DataFrame, b: Int) =
-        df.select(col("conv_id"), col("turn_idx")).withColumn("batch", lit(b))
       materialize(tagged(b1, 1).unionByName(tagged(b2, 2)).unionByName(tagged(b3, 3)),
         "q44_expected")
       tt.write(b1, root, nBuckets = 8, snapshotId = 1L, filesPerBucket = 2)
@@ -1170,10 +1098,6 @@ object SparkEntry {
       val victims = perConv.map(_.getString(0)).sorted.take(3).toSeq
       val before = (perConv.map(_.getLong(1)).sum, perConv.length.toLong)
       val manifestBefore = tt.readManifest(root, 2L)
-      def cnt(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), countDistinct(col("conv_id"))).head()
-        (r.getLong(0), r.getLong(1))
-      }
       val deletedRows = tt.deleteConvIds(s, root, victims, newSnapshotId = 3L)
       // the three post-delete attestations are independent reads of
       // committed snapshots — overlap them (guide §2.6); the victim
@@ -1183,7 +1107,7 @@ object SparkEntry {
       // the membership filter stays on), so the counts are identical
       val Seq(after: (Long, Long) @unchecked, victimsAt2: Long, victimsNow: Long) =
         DriverJobs.run(3, Seq(
-          () => cnt(tt.read(s, root)),
+          () => rowsAndConvs(tt.read(s, root)),
           () => tt.readConvIdsAt(s, root, 2L, victims).count(),
           () => tt.readConvIds(s, root, victims).count()))
       // pruning did its job: most files carried over BY REFERENCE (path
@@ -1224,27 +1148,16 @@ object SparkEntry {
       // input — the two agree iff the stream kept exactly one row per
       // distinct content and dropped nothing else.
       val n = math.min(nConvsFor(dir), 100L)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q30").toString
       val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
-      val dupes = transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
+      val dupes = transcripts.filter(Pipeline.isDocTurn)
         .orderBy(col("conv_id"), col("turn_idx")).limit(20)
         .withColumn("conv_id", concat(lit("dup_"), col("conv_id")))
       val all = transcripts.union(dupes.select(transcripts.columns.toIndexedSeq.map(col): _*))
-      all.coalesce(8).write.mode("overwrite").parquet(s"$tmp/in")
-      materialize(
-        all.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(when(col("tool") === "pdftohtml", "pdfxml")
-            .otherwise("shakespeare").as("format"), col("text")),
-        "q30_expected")
-      // stateful stream: state partitions sized to input volume (see q23b)
-      val se = graft.streaming.StreamingExtract
-      se.withStatePartitions(s, se.statePartitionsFor(s, s"$tmp/in")) {
-        val q = se.startParquet(
-          se.dedupedStream(se.readTranscripts(s, s"$tmp/in")),
-          s"$tmp/out", s"$tmp/ck")
-        awaitStream(q, "q30_stream_dedup")
-      }
-      s.read.parquet(s"$tmp/out")
+      materialize(all.filter(Pipeline.isDocTurn)
+        .select(Pipeline.formatOfTool.as("format"), col("text")), "q30_expected")
+      val stream = new StreamDriver(s, "q30")(StreamingExtract.dedupedStream)
+      stream.land(all).run()
+      stream.output
         .groupBy(col("format"))
         .agg(count(lit(1)).as("n_unique"))
         .orderBy(col("format"))
@@ -1255,26 +1168,12 @@ object SparkEntry {
       // batch read-back aggregates it. Oracle: per-turn golden line counts
       // + the turn's format, materialized from the generator.
       val n = math.min(nConvsFor(dir), 100L)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q23").toString
       val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
-      transcripts.coalesce(8).write.mode("overwrite").parquet(s"$tmp/in")
-      val goldens = Transcripts.goldens(s, n, seed = 42L).toDF()
-      val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("g_lines"))
-      materialize(
-        transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(col("conv_id"), col("turn_idx"),
-            when(col("tool") === "pdftohtml", "pdfxml")
-              .otherwise("shakespeare").as("format"))
-          .join(perTurn, Seq("conv_id", "turn_idx"), "left")
-          .na.fill(0L, Seq("g_lines")),
-        "q23_expected")
-      val q = graft.streaming.StreamingExtract.startParquet(
-        graft.streaming.StreamingExtract.extractedStream(
-          graft.streaming.StreamingExtract.readTranscripts(s, s"$tmp/in")),
-        s"$tmp/out", s"$tmp/ck")
-      awaitStream(q, "q23_stream_windows")
-      s.read.parquet(s"$tmp/out")
+      materialize(expectedLines(transcripts, Transcripts.goldens(s, n, seed = 42L).toDF(),
+        Pipeline.formatOfTool.as("format")), "q23_expected")
+      val stream = new StreamDriver(s, "q23")(StreamingExtract.extractedStream)
+      stream.land(transcripts).run()
+      stream.output
         .groupBy(col("format"))
         .agg(count(lit(1)).as("n_turns"),
           sum(col("n_lines")).cast("bigint").as("n_lines"))

@@ -18,18 +18,28 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
+  /** Document turns: the payloads extraction reads (pdftohtml-XML,
+    * Shakespeare-HTML, raw PDF); every other turn is plain chat text.
+    */
+  def isDocTurn: Column = col("tool").isin("pdftohtml", "shakespeare", "pdf")
+
+  /** The format extract_turn reports for a document turn, from its tool. */
+  def formatOfTool: Column =
+    when(col("tool") === "pdftohtml", "pdfxml")
+      .when(col("tool") === "pdf", "pdf")
+      .otherwise("shakespeare")
+
   /** transcripts(conv_id, turn_idx, text, ...) -> + extracted struct.
     * Only assistant document turns are extracted when `onlyDocs`.
     */
   def extracted(transcripts: DataFrame, onlyDocs: Boolean = true): DataFrame = {
-    val base = if (onlyDocs) transcripts.filter(col("tool").isin("pdftohtml", "shakespeare", "pdf"))
-               else transcripts
+    val base = if (onlyDocs) transcripts.filter(isDocTurn) else transcripts
     base.select(col("conv_id"), col("turn_idx"),
       ExtractTurn(col("text")).as("ex"))
   }
 
-  /** One row per extracted line, in stable (conv_id, turn_idx, line_idx)
-    * order-key form.
+  /** One row per extracted line: `carried` columns of the extracted frame
+    * beside (line_idx, line struct).
     *
     * posexplode_OUTER on purpose: with a non-outer generate, Catalyst's
     * InferFiltersFromGenerate pushes `size(extract_turn(text).lines) > 0 &&
@@ -38,10 +48,15 @@ object Pipeline {
     * infers no filter, so extraction runs exactly once; the cheap
     * `line is not null` below restores non-outer semantics.
     */
-  def lines(extractedDf: DataFrame): DataFrame =
-    extractedDf.select(col("conv_id"), col("turn_idx"),
-        posexplode_outer(col("ex.lines")).as(Seq("line_idx", "line")))
+  def explodeLines(extractedDf: DataFrame, carried: Column*): DataFrame =
+    extractedDf.select(carried :+ posexplode_outer(col("ex.lines")).as(Seq("line_idx", "line")): _*)
       .filter(col("line").isNotNull)
+
+  /** One row per extracted line, in stable (conv_id, turn_idx, line_idx)
+    * order-key form.
+    */
+  def lines(extractedDf: DataFrame): DataFrame =
+    explodeLines(extractedDf, col("conv_id"), col("turn_idx"))
       .select(col("conv_id"), col("turn_idx"), col("line_idx"),
         col("line.kind").as("kind"), col("line.type").as("type"),
         col("line.text").as("text"), col("line.page_num").as("page_num"),
@@ -138,14 +153,6 @@ object Pipeline {
       .select(col("conv_id"), col("turn_idx"), col("turn_ok"))
   }
 
-  def extractTurnCol(c: Column): Column = ExtractTurn(c)
-
-  /** Speaker table with reference-faithful name handling: a Character
-    * heading like "MARCELLUS & BERNARDO (V.O.)" splits into one row per
-    * speaker with the modifier peeled (Analyzer.php:399-463 semantics via
-    * graft.analyze.DocAnalyzer), then dialogue lines attribute to every
-    * speaker of the current heading.
-    */
   /** scalar split kernel shared by [[speakers]] and the q24 oracle lookup:
     * heading -> (name, modifier) per speaker (Analyzer.php:399-463).
     */
@@ -156,9 +163,12 @@ object Pipeline {
       (graft.analyze.DocAnalyzer.normalizeName(nm), modifier)
     }.filter(_._1.nonEmpty)
 
-  def splitSpeakerNames(heading: String): Seq[String] =
-    splitSpeakerNamesWithModifiers(heading).map(_._1)
-
+  /** Speaker table with reference-faithful name handling: a Character
+    * heading like "MARCELLUS & BERNARDO (V.O.)" splits into one row per
+    * speaker with the modifier peeled (Analyzer.php:399-463 semantics via
+    * graft.analyze.DocAnalyzer), then dialogue lines attribute to every
+    * speaker of the current heading.
+    */
   def speakers(linesDf: DataFrame): DataFrame = {
     val w = orderedWindow.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     linesDf

@@ -30,14 +30,14 @@ import scala.jdk.CollectionConverters._
   *   - checkpoints:     <root>/metadata/checkpoints/bucket-<b>.json written
   *                      atomically (tmp + move) per finished partition with
   *                      lineage (snapshot id, partition spec) and counters
-  *                      (turns parsed, bytes tokenized, mismatches)
+  *                      (turns parsed, bytes tokenized)
   *
   * A failed extraction run resumes at partition granularity: buckets with a
   * committed checkpoint manifest are skipped.
   */
 object TranscriptTable {
 
-  final case class Counters(turns: Long, bytes: Long, mismatches: Long)
+  final case class Counters(turns: Long, bytes: Long)
 
   /** drain a java.nio directory stream and CLOSE it — Files.walk/list
     * hold an open directory descriptor until closed, and a long-lived
@@ -809,24 +809,26 @@ object TranscriptTable {
       "partition_spec" -> Str(s"bucket(conv_id, $nBuckets)"),
       "counters" -> Obj.of(
         "turns_parsed" -> Num(c.turns.toDouble),
-        "bytes_tokenized" -> Num(c.bytes.toDouble),
-        "extraction_mismatches" -> Num(c.mismatches.toDouble)),
+        "bytes_tokenized" -> Num(c.bytes.toDouble)),
       "complete" -> Bool(true))
     atomicWrite(dir.resolve(s"bucket-$bucket.json"), Json.write(manifest))
   }
 
+  /** Summed counters of the committed bucket manifests (fields other than
+    * turns/bytes, such as older manifests' always-zero
+    * `extraction_mismatches`, are ignored).
+    */
   def readCounters(outRoot: String): Counters = {
     val dir = checkpointDir(outRoot)
-    if (!Files.isDirectory(dir)) return Counters(0, 0, 0)
+    if (!Files.isDirectory(dir)) return Counters(0, 0)
     drained(Files.list(dir)) {
       _.filter(_.toString.endsWith(".json"))
         .map(p => Json.parse(Files.readString(p)))
-        .foldLeft(Counters(0, 0, 0)) { (acc, m) =>
+        .foldLeft(Counters(0, 0)) { (acc, m) =>
         val c = m("counters")
         Counters(
           acc.turns + c("turns_parsed").asLong,
-          acc.bytes + c("bytes_tokenized").asLong,
-          acc.mismatches + c("extraction_mismatches").asLong)
+          acc.bytes + c("bytes_tokenized").asLong)
         }
     }
   }
@@ -887,7 +889,7 @@ object TranscriptTable {
       if (bucketFiles.isEmpty) {
         // partitionBy writes no files for an empty bucket — commit an
         // empty manifest so resume can progress past it
-        commitBucket(outRoot, b, snapshotId, nBuckets, Counters(0, 0, 0))
+        commitBucket(outRoot, b, snapshotId, nBuckets, Counters(0, 0))
       } else {
       val in = sized(readFiles(spark, tableRoot, meta, bucketFiles), bucketFiles)
       // counters ride the write itself via observe() (SURVEY §2.5): the
@@ -905,7 +907,7 @@ object TranscriptTable {
         s"$outRoot/data/bucket=$b", byBucket = false)
       val m = obs.get
       commitBucket(outRoot, b, snapshotId, nBuckets,
-        Counters(m("turns").asInstanceOf[Long], m("bytes").asInstanceOf[Long], 0))
+        Counters(m("turns").asInstanceOf[Long], m("bytes").asInstanceOf[Long]))
       }
     }: Unit
     // every in-flight bucket settles before a failure propagates: a

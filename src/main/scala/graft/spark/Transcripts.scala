@@ -2,10 +2,11 @@ package graft.spark
 
 import graft.synth.{ScreenplayGen, ShakespeareGen}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.types._
 
 import java.sql.Timestamp
+import scala.reflect.runtime.universe.TypeTag
 
 /** One transcript turn (BASELINE.json input_hint schema). */
 final case class Turn(
@@ -87,18 +88,6 @@ object Transcripts {
 
   def convId(seed: Long, k: Long): String = f"conv-$seed%x-$k%08d"
 
-  /** Deterministic turns for one conversation. */
-  /** Spark-compatible conv_id bucket: pmod(xxhash64(conv_id), nBuckets)
-    * with Spark's default seed 42 — lets a generator TARGET a bucket.
-    */
-  def bucketOf(convIdStr: String, nBuckets: Int): Int = {
-    val b = convIdStr.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
-    val m = h % nBuckets
-    (if (m < 0) m + nBuckets else m).toInt
-  }
-
   /** [[turnsFor]] with the long-conversation skew PLANTED in one bucket:
     * every conversation hashing into bucket 0 of `nBuckets` gets
     * `skewFactor`x the turns. Conversations outside bucket 0 are
@@ -110,10 +99,11 @@ object Transcripts {
     val r = new java.util.SplittableRandom(seed * 1000003L + k)
     val id = convId(seed, k)
     val base = 1 + r.nextInt(math.max(1, avgTurns * 2 - 1))
-    val nTurns = if (bucketOf(id, nBuckets) == 0) base * skewFactor else base
+    val nTurns = if (TranscriptTable.bucketOf(id, nBuckets) == 0) base * skewFactor else base
     turnsBody(r, seed, k, id, nTurns)
   }
 
+  /** Deterministic turns for one conversation. */
   def turnsFor(seed: Long, k: Long, avgTurns: Int, skewEvery: Int, skewFactor: Int): Seq[(Turn, Seq[GoldenLine])] = {
     val r = new java.util.SplittableRandom(seed * 1000003L + k)
     val id = convId(seed, k)
@@ -158,28 +148,63 @@ object Transcripts {
     }
   }
 
-  /** Distributed synthesis: one task per slice of conversations. */
+  /** One corpus family as Spark Datasets: conversation k's rows and
+    * goldens come from `convFor(k)`, one task per slice of conversations
+    * (`parallelism`, default the session's). Each side runs the generator
+    * on its own over the same k, so the two pair exactly; a side is only
+    * built (encoder, plan) when asked for.
+    */
+  final class Corpus[T <: Product : TypeTag, G <: Product : TypeTag] private[Transcripts] (
+      spark: SparkSession, nConvs: Long, parallelism: Int,
+      convFor: Long => Seq[(T, Seq[G])]) {
+    import spark.implicits._
+    private def convs = spark.range(0, nConvs, 1,
+      if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism)
+    def rows: Dataset[T] = { val f = convFor; convs.flatMap(k => f(k).map(_._1)) }
+    def goldens: Dataset[G] = { val f = convFor; convs.flatMap(k => f(k).flatMap(_._2)) }
+  }
+
+  /** The [[Corpus]] of `convFor` over conversations 0 until `nConvs`. */
+  def corpus[T <: Product : TypeTag, G <: Product : TypeTag](spark: SparkSession,
+      nConvs: Long, parallelism: Int = 0)(convFor: Long => Seq[(T, Seq[G])]): Corpus[T, G] =
+    new Corpus(spark, nConvs, parallelism, convFor)
+
+  /** The headline corpus ([[turnsFor]]). */
   def synthesize(spark: SparkSession, nConvs: Long, seed: Long = 42L,
       avgTurns: Int = 8, skewEvery: Int = 1000, skewFactor: Int = 20,
-      parallelism: Int = 0): Dataset[Turn] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => turnsFor(seed, k, avgTurns, skewEvery, skewFactor).map(_._1))
-  }
+      parallelism: Int = 0): Dataset[Turn] =
+    corpus(spark, nConvs, parallelism)(turnsFor(seed, _, avgTurns, skewEvery, skewFactor)).rows
 
   /** The goldens side of the same corpus (same seed => exact pairing). */
   def goldens(spark: SparkSession, nConvs: Long, seed: Long = 42L,
       avgTurns: Int = 8, skewEvery: Int = 1000, skewFactor: Int = 20,
-      parallelism: Int = 0): Dataset[GoldenLine] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => turnsFor(seed, k, avgTurns, skewEvery, skewFactor).flatMap(_._2))
-  }
+      parallelism: Int = 0): Dataset[GoldenLine] =
+    corpus(spark, nConvs, parallelism)(turnsFor(seed, _, avgTurns, skewEvery, skewFactor)).goldens
 
-  def df(spark: SparkSession, nConvs: Long, seed: Long = 42L): DataFrame =
-    synthesize(spark, nConvs, seed).toDF()
+  /** The two-role conversation the attestation corpora below share:
+    * conversation k of `family` has 1 to 2*avgTurns-1 turns alternating
+    * user / assistant. `doc(r, id, ti)` gives an assistant turn's
+    * (payload, tool, goldens); a user turn is `userText` plus 1-6 `filler`
+    * words. One RNG per conversation, drawn in turn order.
+    */
+  private def alternating[G](family: String, salt: Long, seed: Long, k: Long,
+      avgTurns: Int, userText: String, filler: String)(
+      doc: (java.util.SplittableRandom, String, Int) => (String, String, Seq[G])
+  ): Seq[(Turn, Seq[G])] = {
+    val r = new java.util.SplittableRandom(seed * salt + k)
+    val id = f"$family-$seed%x-$k%08d"
+    val nTurns = 1 + r.nextInt(math.max(1, avgTurns * 2 - 1))
+    (0 until nTurns).map { ti =>
+      val ts = new Timestamp(epochMs + k * 3600000L + ti * 60000L)
+      if (ti % 2 == 1) {
+        val (payload, tool, goldens) = doc(r, id, ti)
+        (Turn(id, ti, "assistant", payload, tool, ts), goldens)
+      } else {
+        val text = s"$userText turn $ti of $id: " + (s"$filler " * (1 + r.nextInt(6))).trim
+        (Turn(id, ti, "user", text, "", ts), Seq.empty[G])
+      }
+    }
+  }
 
   // ---- dual-dialog corpus (C10 driver attestation) -----------------------
   // A SEPARATE, small corpus whose every assistant turn is a pdfxml
@@ -191,47 +216,17 @@ object Transcripts {
   /** Deterministic turns for one dual-heavy conversation, with goldens
     * carrying the expected column / dual flags per line.
     */
-  def dualTurnsFor(seed: Long, k: Long, avgTurns: Int): Seq[(Turn, Seq[DualGoldenLine])] = {
-    val r = new java.util.SplittableRandom(seed * 2000003L + k)
-    val id = f"dual-$seed%x-$k%08d"
-    val nTurns = 1 + r.nextInt(math.max(1, avgTurns * 2 - 1))
-    (0 until nTurns).map { ti =>
-      val role = if (ti % 2 == 0) "user" else "assistant"
-      val ts = new Timestamp(epochMs + k * 3600000L + ti * 60000L)
-      if (role == "assistant") {
-        val docSeed = seed ^ (k * 7919L + ti)
-        val doc = ScreenplayGen.render(
-          ScreenplayGen.elementsWithDual(docSeed, 2 + r.nextInt(3)),
-          ScreenplayGen.Options(headerText = s"DUAL DRAFT $id"))
-        val goldens = doc.expected.zip(doc.dualMeta).zipWithIndex.map {
-          case (((kind, text, page, given), (column, hasDual, isDual)), li) =>
-            DualGoldenLine(id, ti, li, kind, text, page, given, column, hasDual, isDual)
-        }
-        (Turn(id, ti, role, doc.xml, "pdftohtml", ts), goldens)
-      } else {
-        val text = s"dual-corpus turn $ti of $id: " + ("ipsum " * (1 + r.nextInt(6))).trim
-        (Turn(id, ti, role, text, "", ts), Seq.empty[DualGoldenLine])
+  def dualTurnsFor(seed: Long, k: Long, avgTurns: Int): Seq[(Turn, Seq[DualGoldenLine])] =
+    alternating("dual", 2000003L, seed, k, avgTurns, "dual-corpus", "ipsum") { (r, id, ti) =>
+      val doc = ScreenplayGen.render(
+        ScreenplayGen.elementsWithDual(seed ^ (k * 7919L + ti), 2 + r.nextInt(3)),
+        ScreenplayGen.Options(headerText = s"DUAL DRAFT $id"))
+      val goldens = doc.expected.zip(doc.dualMeta).zipWithIndex.map {
+        case (((kind, text, page, given), (column, hasDual, isDual)), li) =>
+          DualGoldenLine(id, ti, li, kind, text, page, given, column, hasDual, isDual)
       }
+      (doc.xml, "pdftohtml", goldens)
     }
-  }
-
-  /** Distributed synthesis of the dual-heavy corpus. */
-  def synthesizeDual(spark: SparkSession, nConvs: Long, seed: Long = 4242L,
-      avgTurns: Int = 4, parallelism: Int = 0): Dataset[Turn] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => dualTurnsFor(seed, k, avgTurns).map(_._1))
-  }
-
-  /** Goldens side of the dual corpus (same seed => exact pairing). */
-  def dualGoldens(spark: SparkSession, nConvs: Long, seed: Long = 4242L,
-      avgTurns: Int = 4, parallelism: Int = 0): Dataset[DualGoldenLine] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => dualTurnsFor(seed, k, avgTurns).flatMap(_._2))
-  }
 
   // ---- colored-revision corpus (A4/A5 driver attestation) ----------------
 
@@ -246,49 +241,19 @@ object Transcripts {
     * order), bound name, color, attributed span count — derived by the
     * generator's independent simulation of Parser.php:239-486.
     */
-  def revTurnsFor(seed: Long, k: Long, avgTurns: Int): Seq[(Turn, Seq[RevGoldenLine])] = {
-    val r = new java.util.SplittableRandom(seed * 3000017L + k)
-    val id = f"rev-$seed%x-$k%08d"
-    val nTurns = 1 + r.nextInt(math.max(1, avgTurns * 2 - 1))
-    (0 until nTurns).map { ti =>
-      val role = if (ti % 2 == 0) "user" else "assistant"
-      val ts = new Timestamp(epochMs + k * 3600000L + ti * 60000L)
-      if (role == "assistant") {
-        val docSeed = seed ^ (k * 104729L + ti)
-        // 7-11 scenes: enough body pages that mixed pages occur and the
-        // weight-list bump actually reorders (at 3-5 scenes most docs stay
-        // under 3 body pages and the reorder path would go unexercised)
-        val doc = ScreenplayGen.render(
-          ScreenplayGen.elements(docSeed, 7 + r.nextInt(5)),
-          ScreenplayGen.Options(revisions = revPalette))
-        val goldens = doc.revExpected.map { case (rank, name, color, nSpans) =>
-          RevGoldenLine(id, ti, rank, name, color, nSpans)
-        }
-        (Turn(id, ti, role, doc.xml, "pdftohtml", ts), goldens)
-      } else {
-        val text = s"rev-corpus turn $ti of $id: " + ("dolor " * (1 + r.nextInt(6))).trim
-        (Turn(id, ti, role, text, "", ts), Seq.empty[RevGoldenLine])
+  def revTurnsFor(seed: Long, k: Long, avgTurns: Int): Seq[(Turn, Seq[RevGoldenLine])] =
+    alternating("rev", 3000017L, seed, k, avgTurns, "rev-corpus", "dolor") { (r, id, ti) =>
+      // 7-11 scenes: enough body pages that mixed pages occur and the
+      // weight-list bump actually reorders (at 3-5 scenes most docs stay
+      // under 3 body pages and the reorder path would go unexercised)
+      val doc = ScreenplayGen.render(
+        ScreenplayGen.elements(seed ^ (k * 104729L + ti), 7 + r.nextInt(5)),
+        ScreenplayGen.Options(revisions = revPalette))
+      val goldens = doc.revExpected.map { case (rank, name, color, nSpans) =>
+        RevGoldenLine(id, ti, rank, name, color, nSpans)
       }
+      (doc.xml, "pdftohtml", goldens)
     }
-  }
-
-  /** Distributed synthesis of the colored-revision corpus. */
-  def synthesizeRev(spark: SparkSession, nConvs: Long, seed: Long = 777L,
-      avgTurns: Int = 4, parallelism: Int = 0): Dataset[Turn] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => revTurnsFor(seed, k, avgTurns).map(_._1))
-  }
-
-  /** Goldens side of the colored-revision corpus. */
-  def revGoldens(spark: SparkSession, nConvs: Long, seed: Long = 777L,
-      avgTurns: Int = 4, parallelism: Int = 0): Dataset[RevGoldenLine] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => revTurnsFor(seed, k, avgTurns).flatMap(_._2))
-  }
 
   // ---- margin-numbered corpus (A5 driver attestation) --------------------
 
@@ -296,66 +261,16 @@ object Transcripts {
     * assistant doc carries a line-number token beside each body line and
     * the goldens carry the expected per-type side-vote table.
     */
-  def numberedTurnsFor(seed: Long, k: Long, avgTurns: Int): Seq[(Turn, Seq[VoteGoldenLine])] = {
-    val r = new java.util.SplittableRandom(seed * 5000011L + k)
-    val id = f"num-$seed%x-$k%08d"
-    val nTurns = 1 + r.nextInt(math.max(1, avgTurns * 2 - 1))
-    (0 until nTurns).map { ti =>
-      val role = if (ti % 2 == 0) "user" else "assistant"
-      val ts = new Timestamp(epochMs + k * 3600000L + ti * 60000L)
-      if (role == "assistant") {
-        val docSeed = seed ^ (k * 904997L + ti)
-        val doc = ScreenplayGen.render(
-          ScreenplayGen.elements(docSeed, 2 + r.nextInt(4)),
-          ScreenplayGen.Options(marginLineNumbers = true))
-        val goldens = doc.voteExpected.map { case (tp, l, rr) =>
-          VoteGoldenLine(id, ti, tp, l, rr)
-        }
-        (Turn(id, ti, role, doc.xml, "pdftohtml", ts), goldens)
-      } else {
-        val text = s"numbered turn $ti of $id: " + ("amet " * (1 + r.nextInt(6))).trim
-        (Turn(id, ti, role, text, "", ts), Seq.empty[VoteGoldenLine])
+  def numberedTurnsFor(seed: Long, k: Long, avgTurns: Int): Seq[(Turn, Seq[VoteGoldenLine])] =
+    alternating("num", 5000011L, seed, k, avgTurns, "numbered", "amet") { (r, id, ti) =>
+      val doc = ScreenplayGen.render(
+        ScreenplayGen.elements(seed ^ (k * 904997L + ti), 2 + r.nextInt(4)),
+        ScreenplayGen.Options(marginLineNumbers = true))
+      val goldens = doc.voteExpected.map { case (tp, l, rr) =>
+        VoteGoldenLine(id, ti, tp, l, rr)
       }
+      (doc.xml, "pdftohtml", goldens)
     }
-  }
-
-  /** Distributed synthesis of the margin-numbered corpus. */
-  def synthesizeNumbered(spark: SparkSession, nConvs: Long, seed: Long = 555L,
-      avgTurns: Int = 4, parallelism: Int = 0): Dataset[Turn] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => numberedTurnsFor(seed, k, avgTurns).map(_._1))
-  }
-
-  /** Goldens side of the margin-numbered corpus. */
-  def numberedGoldens(spark: SparkSession, nConvs: Long, seed: Long = 555L,
-      avgTurns: Int = 4, parallelism: Int = 0): Dataset[VoteGoldenLine] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => numberedTurnsFor(seed, k, avgTurns).flatMap(_._2))
-  }
-
-  /** Distributed synthesis of the skew-stress corpus (see skewedTurnsFor). */
-  def synthesizeSkewed(spark: SparkSession, nConvs: Long, seed: Long = 42L,
-      avgTurns: Int = 8, nBuckets: Int = 8, skewFactor: Int = 50,
-      parallelism: Int = 0): Dataset[Turn] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => skewedTurnsFor(seed, k, avgTurns, nBuckets, skewFactor).map(_._1))
-  }
-
-  /** Goldens side of the skew-stress corpus. */
-  def skewedGoldens(spark: SparkSession, nConvs: Long, seed: Long = 42L,
-      avgTurns: Int = 8, nBuckets: Int = 8, skewFactor: Int = 50,
-      parallelism: Int = 0): Dataset[GoldenLine] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => skewedTurnsFor(seed, k, avgTurns, nBuckets, skewFactor).flatMap(_._2))
-  }
 
   // ---- cross-feature corpus (q35 driver attestation) ---------------------
   // Every assistant doc carries dual-dialog exchanges, colored revisions
@@ -364,63 +279,43 @@ object Transcripts {
   // (splice x revision walk x number capture) that the per-feature corpora
   // q32/q33/q34 cannot see. 7-11 scenes so mixed pages occur.
 
+  /** One cross-feature document (7-11 scenes) and its goldens: the dual
+    * fields, each line's canonical revision-span and attr strings, and the
+    * turn-level revision table, side votes and CONTINUED flags repeated on
+    * every row.
+    */
+  private def crossDoc(r: java.util.SplittableRandom, docSeed: Long, id: String,
+      ti: Int): (ScreenplayGen.Doc, Seq[CrossGoldenLine]) = {
+    val doc = ScreenplayGen.render(
+      ScreenplayGen.elementsWithDualTight(docSeed, 7 + r.nextInt(5)),
+      ScreenplayGen.Options(
+        revisions = revPalette,
+        marginLineNumbers = true,
+        sceneNumbers = true,
+        contdMarkers = true,
+        continuedBands = true,
+        inlineStyles = true,
+        fragmentJitter = true))
+    val revTable = doc.revExpected
+      .map { case (rank, name, color, _) => s"$rank:$name:$color" }.mkString(";")
+    val votes = doc.voteExpected
+      .map { case (t, l, rr) => s"$t:$l:$rr" }.mkString(";")
+    val (cTop, cBottom, cNum) = doc.contExpected
+    (doc, doc.expected.zip(doc.dualMeta).zipWithIndex.map {
+      case (((kind, text, page, given), (column, hasDual, isDual)), li) =>
+        CrossGoldenLine(id, ti, li, kind, text, page, given,
+          column, hasDual, isDual,
+          doc.lineRevsExpected(li), doc.lineAttrsExpected(li),
+          revTable, votes, cTop, cBottom, cNum)
+    })
+  }
+
   /** Deterministic turns for one cross-feature conversation. */
-  def crossTurnsFor(seed: Long, k: Long, avgTurns: Int): Seq[(Turn, Seq[CrossGoldenLine])] = {
-    val r = new java.util.SplittableRandom(seed * 7000003L + k)
-    val id = f"cross-$seed%x-$k%08d"
-    val nTurns = 1 + r.nextInt(math.max(1, avgTurns * 2 - 1))
-    (0 until nTurns).map { ti =>
-      val role = if (ti % 2 == 0) "user" else "assistant"
-      val ts = new Timestamp(epochMs + k * 3600000L + ti * 60000L)
-      if (role == "assistant") {
-        val docSeed = seed ^ (k * 611953L + ti)
-        val doc = ScreenplayGen.render(
-          ScreenplayGen.elementsWithDualTight(docSeed, 7 + r.nextInt(5)),
-          ScreenplayGen.Options(
-            revisions = revPalette,
-            marginLineNumbers = true,
-            sceneNumbers = true,
-            contdMarkers = true,
-            continuedBands = true,
-            inlineStyles = true,
-            fragmentJitter = true))
-        val revTable = doc.revExpected
-          .map { case (rank, name, color, _) => s"$rank:$name:$color" }.mkString(";")
-        val votes = doc.voteExpected
-          .map { case (t, l, rr) => s"$t:$l:$rr" }.mkString(";")
-        val (cTop, cBottom, cNum) = doc.contExpected
-        val goldens = doc.expected.zip(doc.dualMeta).zipWithIndex.map {
-          case (((kind, text, page, given), (column, hasDual, isDual)), li) =>
-            CrossGoldenLine(id, ti, li, kind, text, page, given,
-              column, hasDual, isDual,
-              doc.lineRevsExpected(li), doc.lineAttrsExpected(li),
-              revTable, votes, cTop, cBottom, cNum)
-        }
-        (Turn(id, ti, role, doc.xml, "pdftohtml", ts), goldens)
-      } else {
-        val text = s"cross-corpus turn $ti of $id: " + ("sit " * (1 + r.nextInt(6))).trim
-        (Turn(id, ti, role, text, "", ts), Seq.empty[CrossGoldenLine])
-      }
+  def crossTurnsFor(seed: Long, k: Long, avgTurns: Int): Seq[(Turn, Seq[CrossGoldenLine])] =
+    alternating("cross", 7000003L, seed, k, avgTurns, "cross-corpus", "sit") { (r, id, ti) =>
+      val (doc, goldens) = crossDoc(r, seed ^ (k * 611953L + ti), id, ti)
+      (doc.xml, "pdftohtml", goldens)
     }
-  }
-
-  /** Distributed synthesis of the cross-feature corpus. */
-  def synthesizeCross(spark: SparkSession, nConvs: Long, seed: Long = 3131L,
-      avgTurns: Int = 4, parallelism: Int = 0): Dataset[Turn] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => crossTurnsFor(seed, k, avgTurns).map(_._1))
-  }
-
-  /** Goldens side of the cross-feature corpus. */
-  def crossGoldens(spark: SparkSession, nConvs: Long, seed: Long = 3131L,
-      avgTurns: Int = 4, parallelism: Int = 0): Dataset[CrossGoldenLine] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => crossTurnsFor(seed, k, avgTurns).flatMap(_._2))
-  }
 
   /** Raw-PDF corpus: the SAME cross-feature document family, rendered as
     * real PDF bytes ([[graft.synth.PdfGen]]) instead of pdftohtml XML —
@@ -433,101 +328,32 @@ object Transcripts {
       modern: Boolean = false): Seq[(Turn, Seq[CrossGoldenLine])] =
     pdfTurnsBody(seed, k, avgTurns, modern, renderPdf = true)
 
-  /** Shared body of [[pdfTurnsFor]] and the goldens-only path: with
-    * `renderPdf = false` the (expensive) PDF serialization is skipped and
-    * the turn carries empty text — the goldens are derived from the SAME
-    * document/RNG stream either way, so [[pdfGoldens]] no longer renders
-    * PDF bytes it immediately discards (guide §1.2: don't compute things
-    * you throw away).
+  /** The goldens side of [[pdfTurnsFor]], identical for both
+    * serializations: the goldens derive from the document model, so the
+    * (expensive) PDF serialization is skipped and assistant turns carry
+    * empty text: nothing is computed only to be thrown away.
     */
-  private def pdfTurnsBody(seed: Long, k: Long, avgTurns: Int,
-      modern: Boolean, renderPdf: Boolean): Seq[(Turn, Seq[CrossGoldenLine])] = {
-    val r = new java.util.SplittableRandom(seed * 9100019L + k)
-    val id = f"pdf-$seed%x-$k%08d"
-    val nTurns = 1 + r.nextInt(math.max(1, avgTurns * 2 - 1))
-    (0 until nTurns).map { ti =>
-      val role = if (ti % 2 == 0) "user" else "assistant"
-      val ts = new Timestamp(epochMs + k * 3600000L + ti * 60000L)
-      if (role == "assistant") {
-        val docSeed = seed ^ (k * 424243L + ti)
-        val doc = ScreenplayGen.render(
-          ScreenplayGen.elementsWithDualTight(docSeed, 7 + r.nextInt(5)),
-          ScreenplayGen.Options(
-            revisions = revPalette,
-            marginLineNumbers = true,
-            sceneNumbers = true,
-            contdMarkers = true,
-            continuedBands = true,
-            inlineStyles = true,
-            fragmentJitter = true))
-        val revTable = doc.revExpected
-          .map { case (rank, name, color, _) => s"$rank:$name:$color" }.mkString(";")
-        val votes = doc.voteExpected
-          .map { case (t, l, rr) => s"$t:$l:$rr" }.mkString(";")
-        val (cTop, cBottom, cNum) = doc.contExpected
-        val goldens = doc.expected.zip(doc.dualMeta).zipWithIndex.map {
-          case (((kind, text, page, given), (column, hasDual, isDual)), li) =>
-            CrossGoldenLine(id, ti, li, kind, text, page, given,
-              column, hasDual, isDual,
-              doc.lineRevsExpected(li), doc.lineAttrsExpected(li),
-              revTable, votes, cTop, cBottom, cNum)
-        }
-        val pdf =
-          if (!renderPdf) ""
-          else if (modern) graft.synth.PdfGen.fromXmlModern(doc.xml)
-          else graft.synth.PdfGen.fromXml(doc.xml)
-        (Turn(id, ti, role, pdf, "pdf", ts), goldens)
-      } else {
-        val text = s"pdf-corpus turn $ti of $id: " + ("lex " * (1 + r.nextInt(6))).trim
-        (Turn(id, ti, role, text, "", ts), Seq.empty[CrossGoldenLine])
-      }
-    }
-  }
+  def pdfGoldensFor(seed: Long, k: Long, avgTurns: Int): Seq[(Turn, Seq[CrossGoldenLine])] =
+    pdfTurnsBody(seed, k, avgTurns, modern = false, renderPdf = false)
 
-  /** Noisy-HTML corpus for the text-density / link-density boilerplate
-    * classifier (q39): pages built so every block's label is invariant to
-    * its neighbors under the published thresholds — the goldens are the
+  private def pdfTurnsBody(seed: Long, k: Long, avgTurns: Int,
+      modern: Boolean, renderPdf: Boolean): Seq[(Turn, Seq[CrossGoldenLine])] =
+    alternating("pdf", 9100019L, seed, k, avgTurns, "pdf-corpus", "lex") { (r, id, ti) =>
+      val (doc, goldens) = crossDoc(r, seed ^ (k * 424243L + ti), id, ti)
+      val pdf =
+        if (!renderPdf) ""
+        else if (modern) graft.synth.PdfGen.fromXmlModern(doc.xml)
+        else graft.synth.PdfGen.fromXml(doc.xml)
+      (pdf, "pdf", goldens)
+    }
+
+  /** Noisy-HTML page k for the text-density / link-density boilerplate
+    * classifier (q39): built so every block's label is invariant to its
+    * neighbors under the published thresholds — the goldens are the
     * construction, not a classifier run.
     */
-  def synthesizeNoisyHtml(spark: SparkSession, nDocs: Long,
-      seed: Long = 2718L, parallelism: Int = 0): Dataset[HtmlDoc] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nDocs, 1, par)
-      .map(k => HtmlDoc(k, graft.synth.NoisyHtmlGen.page(seed * 524287L + k)._1))
-  }
-
-  def noisyHtmlGoldens(spark: SparkSession, nDocs: Long,
-      seed: Long = 2718L, parallelism: Int = 0): Dataset[HtmlGoldenBlock] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nDocs, 1, par).flatMap { k =>
-      graft.synth.NoisyHtmlGen.page(seed * 524287L + k)._2.zipWithIndex.map {
-        case (text, bi) => HtmlGoldenBlock(k, bi, text)
-      }
-    }
-  }
-
-  /** Distributed synthesis of the raw-PDF corpus. */
-  def synthesizePdf(spark: SparkSession, nConvs: Long, seed: Long = 9393L,
-      avgTurns: Int = 4, parallelism: Int = 0,
-      modern: Boolean = false): Dataset[Turn] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => pdfTurnsFor(seed, k, avgTurns, modern).map(_._1))
-  }
-
-  /** Goldens side of the raw-PDF corpus. Skips the PDF byte serialization
-    * (see [[pdfTurnsBody]]) — the goldens derive from the document model,
-    * not from the bytes, and are identical for both serializations.
-    */
-  def pdfGoldens(spark: SparkSession, nConvs: Long, seed: Long = 9393L,
-      avgTurns: Int = 4, parallelism: Int = 0): Dataset[CrossGoldenLine] = {
-    import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
-    spark.range(0, nConvs, 1, par)
-      .flatMap(k => pdfTurnsBody(seed, k, avgTurns, modern = false,
-        renderPdf = false).flatMap(_._2))
+  def noisyHtmlFor(seed: Long, k: Long): Seq[(HtmlDoc, Seq[HtmlGoldenBlock])] = {
+    val (html, blocks) = graft.synth.NoisyHtmlGen.page(seed * 524287L + k)
+    Seq((HtmlDoc(k, html), blocks.zipWithIndex.map { case (text, bi) => HtmlGoldenBlock(k, bi, text) }))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.spark.{ExtractTurn, Transcripts}
+import graft.spark.{ExtractTurn, Pipeline, Transcripts}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -43,7 +43,7 @@ object StreamingExtract {
   /** incremental extraction: each micro-batch extracts newly arrived turns */
   def extractedStream(transcripts: DataFrame): DataFrame =
     transcripts
-      .filter(col("tool").isin("pdftohtml", "shakespeare"))
+      .filter(Pipeline.isDocTurn)
       .select(col("conv_id"), col("turn_idx"), col("ts"),
         ExtractTurn(col("text")).as("ex"))
       .select(col("conv_id"), col("turn_idx"), col("ts"),
@@ -64,11 +64,8 @@ object StreamingExtract {
     */
   def dedupedStream(transcripts: DataFrame): DataFrame =
     transcripts
-      .filter(col("tool").isin("pdftohtml", "shakespeare"))
-      .select(
-        when(col("tool") === "pdftohtml", "pdfxml")
-          .otherwise("shakespeare").as("format"),
-        col("text"), col("ts"))
+      .filter(Pipeline.isDocTurn)
+      .select(Pipeline.formatOfTool.as("format"), col("text"), col("ts"))
       .withColumn("content_hash", md5(col("text")))
       .withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark("content_hash")

@@ -343,6 +343,33 @@ class OpsSpec extends AnyFunSuite {
     assert(out == expected, s"$out != $expected")
   }
 
+  test("streaming: raw-PDF turns are extracted and deduped as format 'pdf'") {
+    val sp = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_pdf").toString
+    Transcripts.corpus(sp, 3)(Transcripts.pdfTurnsFor(9393L, _, 4)).rows.toDF()
+      .write.mode("overwrite").parquet(dir)
+    val pdfTurns = sp.read.parquet(dir).filter(col("tool") === "pdf")
+    val nPdf = pdfTurns.count()
+    assert(nPdf > 0, "fixture has no raw-PDF turns")
+    val q = StreamingExtract.startMemory(
+      StreamingExtract.extractedStream(StreamingExtract.readTranscripts(sp, dir)),
+      "stream_pdf")
+    q.awaitTermination(60000)
+    val byFormat = sp.sql(
+      "SELECT format, count(*), min(n_lines) FROM stream_pdf GROUP BY format")
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getInt(2))).toMap
+    assert(byFormat.keySet == Set("pdf"), s"formats: $byFormat")
+    assert(byFormat("pdf")._1 == nPdf && byFormat("pdf")._2 > 0, s"$byFormat")
+    val d = StreamingExtract.startMemory(
+      StreamingExtract.dedupedStream(StreamingExtract.readTranscripts(sp, dir)),
+      "sdedup_pdf")
+    d.awaitTermination(60000)
+    val deduped = sp.sql("SELECT format, count(*) FROM sdedup_pdf GROUP BY format")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(deduped == Map("pdf" -> pdfTurns.select("text").distinct().count()),
+      s"deduped: $deduped")
+  }
+
   test("streaming: event-time sessionization emits exactly the quiet conversations") {
     val sp = spark
     val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString

@@ -373,7 +373,7 @@ class SparkPipelineSpec extends AnyFunSuite {
     // re-extracted output
     val out = java.nio.file.Files.createTempDirectory("graft_del_out").toString
     (0 until 4).foreach(b =>
-      TranscriptTable.commitBucket(out, b, 1L, 4, TranscriptTable.Counters(0, 0, 0)))
+      TranscriptTable.commitBucket(out, b, 1L, 4, TranscriptTable.Counters(0, 0)))
     java.nio.file.Files.delete(
       TranscriptTable.checkpointDir(out).resolve("bucket-0.json"))
     val stale = intercept[RuntimeException] {
@@ -482,6 +482,22 @@ class SparkPipelineSpec extends AnyFunSuite {
     assert(c.turns == expect, s"${c.turns} != $expect")
   }
 
+  test("readCounters sums bucket manifests, including the older layout with mismatches") {
+    val out = java.nio.file.Files.createTempDirectory("graft_counters").toString
+    TranscriptTable.commitBucket(out, 0, 1L, 2, TranscriptTable.Counters(3, 100))
+    val written = java.nio.file.Files.readString(
+      TranscriptTable.checkpointDir(out).resolve("bucket-0.json"))
+    assert(!written.contains("mismatches"), written)
+    // a manifest as older builds wrote it, with the always-zero field
+    java.nio.file.Files.writeString(
+      TranscriptTable.checkpointDir(out).resolve("bucket-1.json"),
+      """{"bucket":1,"snapshot_id":1,"partition_spec":"bucket(conv_id, 2)",""" +
+        """"counters":{"turns_parsed":4,"bytes_tokenized":50,""" +
+        """"extraction_mismatches":0},"complete":true}""")
+    assert(TranscriptTable.readCounters(out) == TranscriptTable.Counters(7, 150))
+    assert(TranscriptTable.committedBucketSnapshots(out) == Map(0 -> 1L, 1 -> 1L))
+  }
+
   test("iceberg-style table: bucketed write, checkpointed extract, resume") {
     val sp = spark
     val root = java.nio.file.Files.createTempDirectory("graft_table").toString
@@ -491,7 +507,7 @@ class SparkPipelineSpec extends AnyFunSuite {
     TranscriptTable.write(transcripts, root, nBuckets, snapshotId = 1L)
     assert(TranscriptTable.currentSnapshotId(root).contains(1L))
     // pretend bucket 0 already committed -> resume must skip it
-    TranscriptTable.commitBucket(out, 0, 1L, nBuckets, TranscriptTable.Counters(0, 0, 0))
+    TranscriptTable.commitBucket(out, 0, 1L, nBuckets, TranscriptTable.Counters(0, 0))
     val counters = TranscriptTable.extractWithCheckpoints(sp, root, out, nBuckets)
     assert(TranscriptTable.committedBuckets(out) == Set(0, 1, 2, 3))
     // empty buckets (no directory written) must commit and not crash
