@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{Ann, Dedup, TextOps}
-import graft.spark.{DriverJobs, Pipeline, TranscriptTable, Transcripts}
+import graft.spark.{DriverJobs, Pipeline, TableStore, TranscriptTable, Transcripts}
 import graft.streaming.StreamingExtract
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -64,6 +64,29 @@ object SparkEntry {
     "CASE kind WHEN 'Dialog' THEN 'Dialogue' WHEN 'Slugline' THEN 'Scene'" +
       " WHEN 'Paren' THEN 'Parens' WHEN 'Act' THEN 'New Act' ELSE kind END"
 
+  /** The scratch dirs of the driver queries (tables, checkpoints, stream
+    * sinks): a query's DataFrame reads its dir lazily, after the query
+    * returns, so each `graft_<name>` dir lives until the JVM exits, then
+    * goes through the table store's recursive delete. The exit action runs
+    * after Spark's own shutdown hooks, once no job can read the dirs.
+    */
+  private[graft] object ScratchDirs {
+    private val made = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    private lazy val atExit: Unit = org.apache.hadoop.util.ShutdownHookManager.get
+      .addShutdownHook(() => deleteAll(), 20)
+
+    def apply(name: String): String = {
+      atExit
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+      made.add(dir)
+      dir
+    }
+
+    /** Delete every dir made so far: the JVM-exit action. */
+    def deleteAll(): Unit =
+      Iterator.continually(made.poll()).takeWhile(_ != null).foreach(d => TableStore(d).delete(d))
+  }
+
   /** Streaming attestation driver (q23, q23b, q30, q31, q42): the caller
     * lands input parquet under a fresh temp dir's `in/`, and each [[run]]
     * starts `stream` over the file-source stream of it with an AvailableNow
@@ -76,7 +99,7 @@ object SparkEntry {
   private final class StreamDriver(s: SparkSession, name: String)(
       stream: DataFrame => DataFrame) {
     private val se = StreamingExtract
-    private val tmp = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+    private val tmp = ScratchDirs(name)
 
     def land(df: DataFrame, mode: String = "overwrite"): this.type = {
       df.coalesce(8).write.mode(mode).parquet(s"$tmp/in")
@@ -193,7 +216,7 @@ object SparkEntry {
   private def checkpointAttest(s: SparkSession, name: String, transcripts: DataFrame,
       goldens: DataFrame, nBuckets: Int)(
       runs: (() => TranscriptTable.Counters) => Unit): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+    val tmp = ScratchDirs(name)
     TranscriptTable.write(transcripts, s"$tmp/table", nBuckets, snapshotId = 1L)
     runs(() => TranscriptTable.extractWithCheckpoints(
       s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = nBuckets))
@@ -730,7 +753,7 @@ object SparkEntry {
       // row-count/distinct mismatch.
       val n = math.max(60L, math.min(nConvsFor(dir), 300L))
       val nBuckets = 8
-      val root = java.nio.file.Files.createTempDirectory("graft_q41").toString
+      val root = ScratchDirs("q41")
       val transcripts = Transcripts.synthesize(s, n, seed = 77L).toDF()
       materialize(transcripts.select("conv_id", "turn_idx"), "q41_expected")
       graft.spark.TranscriptTable.write(transcripts, root, nBuckets,
@@ -795,7 +818,7 @@ object SparkEntry {
       // the expire).
       val n = math.min(nConvsFor(dir), 200L)
       val nBuckets = 8
-      val root = java.nio.file.Files.createTempDirectory("graft_q36").toString
+      val root = ScratchDirs("q36")
       val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
       materialize(transcripts.select(col("conv_id"), col("turn_idx"),
         graft.spark.TranscriptTable.bucketCol(nBuckets).as("bucket")),
@@ -948,7 +971,7 @@ object SparkEntry {
       // by requires. The oracle recomputes every window from the
       // materialized per-batch row mapping.
       val n = math.min(nConvsFor(dir), 150L)
-      val root = java.nio.file.Files.createTempDirectory("graft_q43").toString
+      val root = ScratchDirs("q43")
       val tt = graft.spark.TranscriptTable
       val b1 = Transcripts.synthesize(s, n, seed = 42L).toDF()
       val b2 = Transcripts.synthesize(s, math.max(1L, n / 2), seed = 4301L).toDF()
@@ -997,7 +1020,7 @@ object SparkEntry {
       // totals, history chain order, compaction shrinking files but not
       // rows, expire semantics) are require-pinned.
       val n = math.min(nConvsFor(dir), 120L)
-      val root = java.nio.file.Files.createTempDirectory("graft_q44").toString
+      val root = ScratchDirs("q44")
       val tt = graft.spark.TranscriptTable
       val b1 = Transcripts.synthesize(s, n, seed = 42L).toDF()
       val b2 = Transcripts.synthesize(s, math.max(1L, n / 2), seed = 4401L).toDF()
@@ -1076,7 +1099,7 @@ object SparkEntry {
       // (before/after/deleted row+conv counts, engine-read) is recomputed
       // by the oracle from the input mapping alone.
       val n = math.min(nConvsFor(dir), 120L)
-      val root = java.nio.file.Files.createTempDirectory("graft_q45").toString
+      val root = ScratchDirs("q45")
       val tt = graft.spark.TranscriptTable
       val b1 = Transcripts.synthesize(s, n, seed = 42L).toDF()
       val b2 = Transcripts.synthesize(s, math.max(1L, n / 2), seed = 4501L).toDF()

@@ -59,14 +59,6 @@ object Php {
     }
   }
 
-  /** mb_strrpos */
-  def mbStrrpos(s: String, needle: String): Int = {
-    val i = s.lastIndexOf(needle)
-    if (i < 0) -1
-    else if (isBmp(s)) i
-    else s.codePointCount(0, i)
-  }
-
   /** PHP trim()'s default charlist: " \t\n\r\0\x0B" */
   private val phpTrimChars: Set[Char] = Set(' ', '\t', '\n', '\r', '\u0000', '\u000B')
 
@@ -200,13 +192,6 @@ object Php {
   def isPrefix(s: String, prefix: String, caseSensitive: Boolean = true): Boolean =
     if (caseSensitive) s.startsWith(prefix)
     else s.toLowerCase(Locale.ROOT).startsWith(prefix.toLowerCase(Locale.ROOT))
-  def isSuffix(s: String, suffix: String, caseSensitive: Boolean = true): Boolean =
-    if (caseSensitive) s.endsWith(suffix)
-    else s.toLowerCase(Locale.ROOT).endsWith(suffix.toLowerCase(Locale.ROOT))
-
-  /** first_word / last_word (Utilities.php:5-21). */
-  def firstWord(s: String): String = { val i = s.indexOf(' '); if (i >= 0) s.substring(0, i) else s }
-  def lastWord(s: String): String = { val i = s.lastIndexOf(' '); if (i >= 0) s.substring(i + 1) else s }
 
   /** white_out (ParseText.php:656-662): case-insensitive replace of marker
     * (and its smart-quote variants) with equal-code-point-length spaces.
@@ -234,8 +219,6 @@ object Php {
     }
     -1
   }
-  def containsIgnoreCase(s: String, find: String): Boolean =
-    indexOfIgnoreCase(s, find, 0) >= 0
 
   /** str_ireplace: ASCII-case-insensitive literal replace of all occurrences. */
   def replaceIgnoreCase(s: String, find: String, repl: String): String = {
@@ -272,42 +255,6 @@ object Php {
     }
     sb.toString
   }
-
-  /** ends_sentence (ParseText.php:2519-2552): peel one trailing quote,
-    * exclude "...", exclude title abbreviations (Mr., Dr., ...) unless part
-    * of a larger word.
-    */
-  private val sentenceEnds = Set('.', '!', '?')
-  private val titleAbbrevs = Vector("Mrs.", "Mr.", "Ms.", "Prof.", "Dr.",
-    "Gen.", "Rep.", "Sen.", "St.", "Sr.", "Jr.", "Ph.D.", "M.D.", "B.A.",
-    "M.A.", "D.D.S.")
-  def endsSentence(str0: String): Boolean = {
-    var str = str0
-    if (str.isEmpty) return false
-    var last = str.charAt(str.length - 1)
-    if (last == '"' || last == '\'') {
-      str = str.substring(0, str.length - 1)
-      if (str.isEmpty) return false
-      last = str.charAt(str.length - 1)
-    }
-    if (last == '.' && str.length >= 2 && str.charAt(str.length - 2) == '.')
-      return false // "..." is not a sentence end
-    if (!sentenceEnds.contains(last)) return false
-    if (last == '.') {
-      titleAbbrevs.foreach { t =>
-        if (isSuffix(str, t, caseSensitive = false)) {
-          val prevIdx = str.length - t.length - 1
-          val prev = if (prevIdx >= 0) str.charAt(prevIdx) else ' '
-          if (!ctypeAlnum(prev)) return false
-        }
-      }
-    }
-    true
-  }
-
-  /** sentence_count (Utilities.php:43-50). */
-  def sentenceCount(s: String): Int =
-    1 + Seq(".  ", "!  ", "?  ").map(p => countOccurrences(s, p)).sum
 
   def countOccurrences(s: String, sub: String): Int = {
     var c = 0; var i = s.indexOf(sub)

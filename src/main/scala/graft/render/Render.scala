@@ -16,7 +16,8 @@ import scala.collection.mutable.ArrayBuffer
 object Render {
 
   /** the two Fountain auto-detection predicates (WriteOutput.php:75-93);
-    * shared with [[FountainReader]] so render and re-parse agree on them
+    * shared with the test-side Fountain re-parser (graft.render.FountainReader)
+    * so render and re-parse agree on them
     */
   def matchedAsSlug(content: String): Boolean =
     Seq("INT", "EXT", "EST", "INT/EXT", "INT./EXT", "I/E").exists(p =>

@@ -7,14 +7,14 @@ import org.apache.hadoop.io.nativeio.NativeIO
 import java.nio.file.Files
 import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermission}
 
-/** The `file:` filesystem the table's parquet writes go through: Hadoop's
-  * checksummed `LocalFileSystem` over a raw layer that sets permissions
-  * in-process. Without the native Hadoop library, `RawLocalFileSystem`
-  * starts a `chmod` process for every directory and file it creates
-  * (9 per bucket job: the output, `_temporary` and attempt dirs, the data
-  * file, `_SUCCESS` and their `.crc` siblings), milliseconds each against
-  * microseconds for `Files.setPosixFilePermissions`. The mode bits are the
-  * ones Hadoop would set (it applies the umask before calling
+/** The `file:` filesystem of the table's parquet writes and [[TableStore]]:
+  * Hadoop's checksummed `LocalFileSystem` over a raw layer that sets
+  * permissions in-process. Without the native Hadoop library,
+  * `RawLocalFileSystem` starts a `chmod` process for every directory and
+  * file it creates (9 per bucket job: the output, `_temporary` and attempt
+  * dirs, the data file, `_SUCCESS` and their `.crc` siblings), milliseconds
+  * each against microseconds for `Files.setPosixFilePermissions`. The mode
+  * bits are the ones Hadoop would set (it applies the umask before calling
   * `setPermission`); native IO, a sticky/setuid mode, or a path without a
   * POSIX view defer to Hadoop.
   */

@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-STYLE table layout for the transcripts / extraction tables.
@@ -20,31 +19,32 @@ import scala.jdk.CollectionConverters._
   *                      conv_id bucketing the north rule requires). Data
   *                      files are IMMUTABLE: each write/overwrite lands
   *                      its files under its own snapshot directory.
-  *   - snapshot:        <root>/metadata/snapshot-<id>.json  (+ current.json
-  *                      pointer), carrying the partition spec, schema and
-  *                      the MANIFEST — the (bucket, path) list of data
-  *                      files composing the snapshot. Reads always resolve
-  *                      through a manifest, so a prior snapshot stays
-  *                      readable after an overwrite ([[readAt]]) until
-  *                      [[expireSnapshots]] garbage-collects it.
-  *   - checkpoints:     <root>/metadata/checkpoints/bucket-<b>.json written
-  *                      atomically (tmp + move) per finished partition with
-  *                      lineage (snapshot id, partition spec) and counters
-  *                      (turns parsed, bytes tokenized)
+  *   - snapshot:        <root>/metadata/snapshot-<id>.json, carrying the
+  *                      partition spec, schema and the MANIFEST — the
+  *                      (bucket, path) list of data files composing the
+  *                      snapshot. Reads always resolve through a manifest,
+  *                      so a prior snapshot stays readable after an
+  *                      overwrite ([[readAt]]) until [[expireSnapshots]]
+  *                      garbage-collects it. The CURRENT snapshot is the
+  *                      highest committed id, found by listing (a
+  *                      `current.json` left by older builds is ignored).
+  *   - checkpoints:     <root>/metadata/checkpoints/bucket-<b>.json per
+  *                      finished partition, with lineage (snapshot id,
+  *                      partition spec) and counters (turns parsed, bytes
+  *                      tokenized)
   *
-  * A failed extraction run resumes at partition granularity: buckets with a
-  * committed checkpoint manifest are skipped.
+  * Every metadata operation goes through [[TableStore]] on the root's
+  * Hadoop filesystem, and every commit is put-if-absent (see [[claimed]]).
+  * A failed extraction run resumes at partition granularity: buckets with
+  * a committed checkpoint manifest are skipped.
   */
 object TranscriptTable {
 
   final case class Counters(turns: Long, bytes: Long)
 
-  /** drain a java.nio directory stream and CLOSE it — Files.walk/list
-    * hold an open directory descriptor until closed, and a long-lived
-    * driver calling these per bucket/snapshot would leak them
-    */
-  private def drained[A, B](stream: java.util.stream.Stream[A])(f: Iterator[A] => B): B =
-    try f(stream.iterator.asScala) finally stream.close()
+  /** A commit refused: its id or file is taken, or the table moved on
+    * while it was written (an IllegalArgumentException, as always). */
+  final class CommitConflict(message: String) extends IllegalArgumentException(message)
 
   /** One manifest entry: the bucket a data file belongs to, its path
     * relative to the table root, and (when collected at write time)
@@ -60,22 +60,23 @@ object TranscriptTable {
 
   def bucketCol(nBuckets: Int) = pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int")
 
-  private def snapDataDir(root: String, snapshotId: Long): String =
-    s"$root/data/snap-$snapshotId"
+  private def snapDataDir(root: String, id: Long) = s"$root/data/snap-$id"
+  private def snapshotFile(root: String, id: Long) = s"$root/metadata/snapshot-$id.json"
+  private val SnapshotName = """snapshot-(\d+)\.json""".r
+  private val BucketName = """bucket-(\d+)\.json""".r
 
-  /** Snapshot ids are immutable. This must run BEFORE any data write: the
-    * parquet writes in [[write]]/[[overwriteBucket]] use SaveMode.Overwrite
-    * on data/snap-<id>, so a duplicate id checked only at metadata-commit
-    * time would already have DELETED the existing snapshot's data files
-    * (still referenced by current/kept manifests) before the require fired,
-    * leaving the table unreadable behind a "rejected" write.
-    */
-  private def requireFreshSnapshot(root: String, snapshotId: Long): Unit = {
-    require(!Files.exists(Paths.get(root, "metadata", s"snapshot-$snapshotId.json")),
-      s"snapshot $snapshotId already exists at $root — snapshot ids are immutable, use a new id")
-    require(!Files.exists(Paths.get(snapDataDir(root, snapshotId))),
-      s"data dir for snapshot $snapshotId already exists at $root — " +
-        "snapshot ids are immutable (a failed write may have left the dir; remove it explicitly)")
+  /** Run a write of snapshot `snapshotId` over `parent`, the current one.
+    * The id must grow past it and is claimed by creating its data dir before
+    * any data lands, so a second writer of it fails before touching the
+    * winner's files. A failure of `body` rolls the dir back (id reusable). */
+  private def claimed[A](root: String, snapshotId: Long, parent: Option[Long])(body: => A): A = {
+    for (c <- parent if c >= snapshotId) throw new CommitConflict(s"snapshot $snapshotId " +
+      s"is at or below the current snapshot $c at $root — snapshot ids only grow, use a new id")
+    val store = TableStore(root)
+    if (!store.claimDir(snapDataDir(root, snapshotId)))
+      throw new CommitConflict(s"data dir for snapshot $snapshotId already exists at $root — " +
+        "another writer holds the id, or a crashed write left the dir (remove it explicitly)")
+    try body catch { case e: Throwable => store.delete(snapDataDir(root, snapshotId)); throw e }
   }
 
   /** The snapshot's recorded schema. Reads trust it instead of sampling
@@ -94,22 +95,12 @@ object TranscriptTable {
   }
 
   /** All parquet files under a snapshot data dir, as manifest entries with
-    * root-relative paths; bucket parsed from the `bucket=N` path segment.
-    */
-  private def listDataFiles(root: String, snapshotId: Long): Vector[DataFile] = {
-    val base = Paths.get(snapDataDir(root, snapshotId))
-    if (!Files.isDirectory(base)) return Vector.empty
-    val rootPath = Paths.get(root)
-    val out = drained(Files.walk(base)) { it =>
-      it.filter(p => p.toString.endsWith(".parquet"))
-        .map { p =>
-          val rel = rootPath.relativize(p).toString
-          val bucket = p.getParent.getFileName.toString.stripPrefix("bucket=").toInt
-          DataFile(bucket, rel)
-        }.toVector
-    }
-    out.sortBy(_.path)
-  }
+    * root-relative paths; bucket parsed from the `bucket=N` path segment. */
+  private def listDataFiles(root: String, snapshotId: Long): Vector[DataFile] =
+    TableStore(root).files(snapDataDir(root, snapshotId), ".parquet").map { rel =>
+      val dirs = rel.split('/')
+      DataFile(dirs(dirs.length - 2).stripPrefix("bucket=").toInt, s"data/snap-$snapshotId/$rel")
+    }.sortBy(_.path)
 
   /** UTF-8 binary comparison — the ordering parquet stats, Spark string
     * comparisons and the layout's sort all use. JVM String.compareTo
@@ -160,64 +151,54 @@ object TranscriptTable {
   } catch { case _: Exception => f } // unreadable footer: keep the entry unpruned
 
   /** footer reads are independent metadata fetches — run them on a small
-    * pool so a many-file commit doesn't serialize thousands of ~1 ms
-    * opens on the driver
-    */
+    * pool so a many-file commit doesn't serialize thousands of ~1 ms opens */
   private def withStats(root: String, files: Vector[DataFile]): Vector[DataFile] = {
-    // one shared (read-only) Configuration: constructing it per file
-    // re-parses the Hadoop default XMLs a thousand times on a big commit
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = TableStore.conf // one shared, read-only Configuration
     DriverJobs.run(if (files.length <= 4) 1 else 16,
       files.map(f => () => footerStats(root, f, conf))).toVector
   }
 
+  /** Commit the snapshot file put-if-absent, refused unless the table is
+    * still at `parent`: a writer that committed meanwhile, under any id,
+    * wins, and this one (inside [[claimed]]) rolls back. */
   private def writeSnapshot(root: String, snapshotId: Long, nBuckets: Int,
       schemaJson: String, manifest: Vector[DataFile],
-      operation: String = "overwrite", parent: Option[Long] = None): Unit = {
-    val meta = Paths.get(root, "metadata")
-    Files.createDirectories(meta)
-    // defense in depth: writers call requireFreshSnapshot BEFORE the data
-    // write (the load-bearing guard); this re-check catches a concurrent
-    // writer that raced past the first one
-    require(!Files.exists(meta.resolve(s"snapshot-$snapshotId.json")),
-      s"snapshot $snapshotId already exists at $root — snapshot ids are immutable, use a new id")
-    val snap = Obj.of(
-      Vector[(String, Json.Value)](
-      "snapshot_id" -> Num(snapshotId.toDouble),
+      operation: String, parent: Option[Long]): Unit = {
+    def num(n: Long): Json.Value = Num(n.toDouble)
+    def present(kvs: (String, Option[Json.Value])*) = kvs.collect { case (k, Some(v)) => k -> v }
+    val snap = Obj.of(present(
+      "snapshot_id" -> Some(num(snapshotId)),
       // lineage for incremental scans: what this snapshot DID and what it
       // grew out of (absent parent = table creation)
-      "operation" -> Str(operation)) ++
-      parent.map(p => "parent_snapshot_id" -> (Num(p.toDouble): Json.Value)).toVector ++
-      Vector[(String, Json.Value)](
-      "format" -> Str("parquet"),
-      "partition_spec" -> Obj.of(
+      "operation" -> Some(Str(operation)),
+      "parent_snapshot_id" -> parent.map(num),
+      "format" -> Some(Str("parquet")),
+      "partition_spec" -> Some(Obj.of(
         "kind" -> Str("bucket"),
         "column" -> Str("conv_id"),
         "transform" -> Str(s"pmod(xxhash64(conv_id), $nBuckets)"),
-        "n_buckets" -> Num(nBuckets.toDouble)),
-      "schema" -> Str(schemaJson),
-      "manifest" -> Arr(manifest.map { f =>
-        val base = Vector[(String, Json.Value)](
-          "bucket" -> Num(f.bucket.toDouble),
-          "path" -> Str(f.path))
-        val stats: Vector[(String, Json.Value)] =
-          Vector("rows" -> f.rows, "bytes" -> f.bytes)
-            .collect { case (k, n) if n >= 0 => k -> (Num(n.toDouble): Json.Value) } ++
-          ((f.minConvId, f.maxConvId) match {
-            case (Some(mn), Some(mx)) => Vector[(String, Json.Value)](
-              "min_conv_id" -> Str(mn), "max_conv_id" -> Str(mx))
-            case _ => Vector.empty
-          })
-        Obj.of(base ++ stats: _*)
-      }.toVector)): _*)
-    atomicWrite(meta.resolve(s"snapshot-$snapshotId.json"), Json.write(snap))
-    atomicWrite(meta.resolve("current.json"),
-      Json.write(Obj.of("current_snapshot_id" -> Num(snapshotId.toDouble))))
+        "n_buckets" -> num(nBuckets))),
+      "schema" -> Some(Str(schemaJson)),
+      "manifest" -> Some(Arr(manifest.map { f =>
+        val stats = f.minConvId.zip(f.maxConvId)
+        Obj.of(present("bucket" -> Some(num(f.bucket)), "path" -> Some(Str(f.path)),
+          "rows" -> Some(f.rows).filter(_ >= 0).map(num),
+          "bytes" -> Some(f.bytes).filter(_ >= 0).map(num),
+          "min_conv_id" -> stats.map(s => Str(s._1)),
+          "max_conv_id" -> stats.map(s => Str(s._2))): _*)
+      }))): _*)
+    def at(id: Option[Long]) = id.fold("no snapshot")(i => s"snapshot $i")
+    if (currentSnapshotId(root) != parent ||
+        !TableStore(root).putIfAbsent(snapshotFile(root, snapshotId), Json.write(snap)))
+      throw new CommitConflict(s"snapshot $snapshotId at $root was written over " +
+        s"${at(parent)}, but another writer committed ${at(currentSnapshotId(root))} first")
   }
 
-  /** The table's one parquet write: overwrite `dir` with `df`, through
-    * [[LocalFs]] for `file:` paths (no `chmod` process per file or dir).
-    * Table data is partitioned by `bucket`, in CPU-sized row groups: a
+  /** The table's one parquet write of `df` into `dir`, through [[LocalFs]]
+    * for `file:` paths (no `chmod` process per file or dir). Table data
+    * appends into the empty snapshot dir [[claimed]] made (an overwrite
+    * would delete and re-create it, reopening the claim); a checkpoint
+    * bucket's output overwrites its last try. Table data is partitioned by `bucket`, in CPU-sized row groups: a
     * parquet file only splits at ROW-GROUP boundaries, so with the 128 MB
     * default one skew-heavy bucket file is ONE scan task no matter what
     * maxPartitionBytes says — measured 2.6x (salted) / 7.1x (unsalted)
@@ -226,7 +207,8 @@ object TranscriptTable {
     * parallelism inside big files.
     */
   private def writeParquet(df: DataFrame, dir: String, byBucket: Boolean = true): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
+    val w = df.write.mode(if (byBucket) SaveMode.Append else SaveMode.Overwrite)
+      .options(LocalFs.writeOptions)
     if (byBucket)
       w.option("parquet.block.size", (4 * 1024 * 1024).toString).partitionBy("bucket").parquet(dir)
     else w.parquet(dir)
@@ -253,26 +235,27 @@ object TranscriptTable {
   def write(df: DataFrame, root: String, nBuckets: Int, snapshotId: Long,
       filesPerBucket: Int = 4, layout: String = "salted",
       operation: String = ""): Unit = {
-    requireFreshSnapshot(root, snapshotId)
     val parentId = currentSnapshotId(root)
-    // table creation is an append (nothing replaced); a full rewrite of an
-    // existing table replaces every row. `operation` overrides (compact
-    // stamps "replace").
-    val op = if (operation.nonEmpty) operation
-             else if (parentId.isEmpty) "append" else "overwrite"
-    val withBucket = df.withColumn("bucket", bucketCol(nBuckets))
-    val split = layout match {
-      case "salted" => withBucket
-        .repartition(nBuckets * filesPerBucket, col("bucket"),
-          pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
-      case "range" => withBucket
-        .repartitionByRange(nBuckets * filesPerBucket, col("bucket"), col("conv_id"))
-      case other => sys.error(s"unknown layout '$other' (salted | range)")
+    claimed(root, snapshotId, parentId) {
+      // table creation is an append (nothing replaced); a full rewrite of an
+      // existing table replaces every row. `operation` overrides (compact
+      // stamps "replace").
+      val op = if (operation.nonEmpty) operation
+               else if (parentId.isEmpty) "append" else "overwrite"
+      val withBucket = df.withColumn("bucket", bucketCol(nBuckets))
+      val split = layout match {
+        case "salted" => withBucket
+          .repartition(nBuckets * filesPerBucket, col("bucket"),
+            pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
+        case "range" => withBucket
+          .repartitionByRange(nBuckets * filesPerBucket, col("bucket"), col("conv_id"))
+        case other => sys.error(s"unknown layout '$other' (salted | range)")
+      }
+      writeParquet(split.sortWithinPartitions("conv_id", "turn_idx"), // stable order within files
+        snapDataDir(root, snapshotId))
+      writeSnapshot(root, snapshotId, nBuckets, df.schema.json,
+        withStats(root, listDataFiles(root, snapshotId)), op, parentId)
     }
-    writeParquet(split.sortWithinPartitions("conv_id", "turn_idx"), // stable order within files
-      snapDataDir(root, snapshotId))
-    writeSnapshot(root, snapshotId, nBuckets, df.schema.json,
-      withStats(root, listDataFiles(root, snapshotId)), op, parentId)
   }
 
   /** Iceberg-style partition overwrite: replace ONE bucket's data in a NEW
@@ -290,48 +273,40 @@ object TranscriptTable {
   def overwriteBucket(df: DataFrame, root: String, bucket: Int,
       newSnapshotId: Long, filesPerBucket: Int = 4,
       allowEmpty: Boolean = false): Unit = {
-    requireFreshSnapshot(root, newSnapshotId)
-    val curId = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
-    val cur = snapshotMeta(root, curId)
-    requireTableSchema("overwriteBucket", df, cur)
-    val nBuckets = cur("partition_spec")("n_buckets").asInt
-    // total/matched counters ride the write itself (one pass, no recount)
-    val obs = org.apache.spark.sql.Observation(s"graft_ow_${newSnapshotId}_b$bucket")
-    writeParquet(df.withColumn("bucket", bucketCol(nBuckets))
-      .observe(obs, count(lit(1)).as("total"),
-        coalesce(sum(when(col("bucket") === bucket, 1L).otherwise(0L)), lit(0L))
-          .as("matched"))
-      .filter(col("bucket") === bucket)
-      .repartition(filesPerBucket,
-        pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
-      .sortWithinPartitions("conv_id", "turn_idx"), snapDataDir(root, newSnapshotId))
-    // emptiness check rides the OUTPUT, not the observation: partitionBy
-    // writes no parquet files for zero rows, and precisely in that case AQE
-    // prunes the CollectMetrics node from the final plan (empty-relation
-    // propagation) so the observation map comes back EMPTY — the metrics
-    // are only a best-effort dropped-rows warning below
-    val newFiles = listDataFiles(root, newSnapshotId)
-    if (newFiles.isEmpty && !allowEmpty) {
-      // nothing committed yet (no snapshot json, current.json untouched);
-      // remove the orphan data dir so the id stays usable after the caller
-      // fixes their input
-      val dir = Paths.get(snapDataDir(root, newSnapshotId))
-      if (Files.isDirectory(dir)) drained(Files.walk(dir)) {
-        _.toVector.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-      }
-      sys.error(s"overwriteBucket: no input row hashes to bucket $bucket — " +
-        s"refusing to silently drop the bucket from snapshot $newSnapshotId; " +
-        "pass allowEmpty = true to empty it intentionally")
+    val curId = headId(root)
+    claimed(root, newSnapshotId, Some(curId)) {
+      val cur = snapshotMeta(root, curId)
+      requireTableSchema("overwriteBucket", df, cur)
+      val nBuckets = cur("partition_spec")("n_buckets").asInt
+      // total/matched counters ride the write itself (one pass, no recount)
+      val obs = org.apache.spark.sql.Observation(s"graft_ow_${newSnapshotId}_b$bucket")
+      writeParquet(df.withColumn("bucket", bucketCol(nBuckets))
+        .observe(obs, count(lit(1)).as("total"),
+          coalesce(sum(when(col("bucket") === bucket, 1L).otherwise(0L)), lit(0L))
+            .as("matched"))
+        .filter(col("bucket") === bucket)
+        .repartition(filesPerBucket,
+          pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
+        .sortWithinPartitions("conv_id", "turn_idx"), snapDataDir(root, newSnapshotId))
+      // emptiness check rides the OUTPUT, not the observation: partitionBy
+      // writes no parquet files for zero rows, and precisely in that case AQE
+      // prunes the CollectMetrics node from the final plan (empty-relation
+      // propagation) so the observation map comes back EMPTY — the metrics
+      // are only a best-effort dropped-rows warning below
+      val newFiles = listDataFiles(root, newSnapshotId)
+      if (newFiles.isEmpty && !allowEmpty)
+        sys.error(s"overwriteBucket: no input row hashes to bucket $bucket — " +
+          s"refusing to silently drop the bucket from snapshot $newSnapshotId; " +
+          "pass allowEmpty = true to empty it intentionally")
+      val m = obs.get
+      for (t <- m.get("total").map(_.asInstanceOf[Long]);
+           mt <- m.get("matched").map(_.asInstanceOf[Long]); if mt < t)
+        Console.err.println(s"[TranscriptTable] overwriteBucket: ${t - mt} " +
+          s"of $t input rows hash outside bucket $bucket and were dropped")
+      val kept = manifestOf(cur).filterNot(_.bucket == bucket)
+      writeSnapshot(root, newSnapshotId, nBuckets, cur("schema").asString,
+        kept ++ withStats(root, newFiles), "overwrite", Some(curId))
     }
-    val m = obs.get
-    for (t <- m.get("total").map(_.asInstanceOf[Long]);
-         mt <- m.get("matched").map(_.asInstanceOf[Long]); if mt < t)
-      Console.err.println(s"[TranscriptTable] overwriteBucket: ${t - mt} " +
-        s"of $t input rows hash outside bucket $bucket and were dropped")
-    val kept = manifestOf(cur).filterNot(_.bucket == bucket)
-    writeSnapshot(root, newSnapshotId, nBuckets, cur("schema").asString,
-      kept ++ withStats(root, newFiles), "overwrite", Some(curId))
   }
 
   /** Iceberg-style fast append: land NEW data files for the input rows
@@ -347,29 +322,23 @@ object TranscriptTable {
     */
   def append(df: DataFrame, root: String, newSnapshotId: Long,
       filesPerBucket: Int = 4): Unit = {
-    requireFreshSnapshot(root, newSnapshotId)
-    val curId = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root — append needs an existing table"))
-    val cur = snapshotMeta(root, curId)
-    requireTableSchema("append", df, cur)
-    val nBuckets = cur("partition_spec")("n_buckets").asInt
-    writeParquet(df.withColumn("bucket", bucketCol(nBuckets))
-      .repartition(nBuckets * filesPerBucket, col("bucket"),
-        pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
-      .sortWithinPartitions("conv_id", "turn_idx"), snapDataDir(root, newSnapshotId))
-    val newFiles = listDataFiles(root, newSnapshotId)
-    if (newFiles.isEmpty) {
-      // an empty append is a caller mistake, not a new snapshot; clean the
-      // orphan dir so the id stays usable (mirrors overwriteBucket)
-      val dir = Paths.get(snapDataDir(root, newSnapshotId))
-      if (Files.isDirectory(dir)) drained(Files.walk(dir)) {
-        _.toVector.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-      }
-      sys.error(s"append: no input rows — refusing to commit empty snapshot $newSnapshotId")
+    val curId = headId(root)
+    claimed(root, newSnapshotId, Some(curId)) {
+      val cur = snapshotMeta(root, curId)
+      requireTableSchema("append", df, cur)
+      val nBuckets = cur("partition_spec")("n_buckets").asInt
+      writeParquet(df.withColumn("bucket", bucketCol(nBuckets))
+        .repartition(nBuckets * filesPerBucket, col("bucket"),
+          pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
+        .sortWithinPartitions("conv_id", "turn_idx"), snapDataDir(root, newSnapshotId))
+      val newFiles = listDataFiles(root, newSnapshotId)
+      // an empty append is a caller mistake, not a new snapshot
+      if (newFiles.isEmpty)
+        sys.error(s"append: no input rows — refusing to commit empty snapshot $newSnapshotId")
+      writeSnapshot(root, newSnapshotId, nBuckets, cur("schema").asString,
+        manifestOf(cur) ++ withStats(root, newFiles),
+        "append", Some(curId))
     }
-    writeSnapshot(root, newSnapshotId, nBuckets, cur("schema").asString,
-      manifestOf(cur) ++ withStats(root, newFiles),
-      "append", Some(curId))
   }
 
   /** Iceberg-style incremental append scan: the rows ADDED after
@@ -383,7 +352,7 @@ object TranscriptTable {
     */
   def incrementalRead(spark: SparkSession, root: String,
       fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
-    snapshotMeta(root, fromSnapshotId) // must exist
+    val before = readManifest(root, fromSnapshotId).map(_.path).toSet // must exist
     var id = toSnapshotId
     while (id != fromSnapshotId) {
       val m = snapshotMeta(root, id)
@@ -395,7 +364,6 @@ object TranscriptTable {
         sys.error(s"snapshot lineage from $toSnapshotId never reaches " +
           s"$fromSnapshotId (chain breaks at $id)"))
     }
-    val before = readManifest(root, fromSnapshotId).map(_.path).toSet
     val to = snapshotMeta(root, toSnapshotId)
     readFiles(spark, root, to, manifestOf(to).filterNot(f => before(f.path)))
   }
@@ -437,11 +405,8 @@ object TranscriptTable {
   }
 
   /** Read the table at its CURRENT snapshot. */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val id = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
-    readAt(spark, root, id)
-  }
+  def read(spark: SparkSession, root: String): DataFrame =
+    readAt(spark, root, headId(root))
 
   /** Bin-pack compaction (the Iceberg `rewrite_data_files` maintenance
     * action): rewrite the CURRENT snapshot's data into `filesPerBucket`
@@ -454,8 +419,7 @@ object TranscriptTable {
     */
   def compact(spark: SparkSession, root: String, newSnapshotId: Long,
       filesPerBucket: Int = 1, layout: String = "salted"): Unit = {
-    val curId = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
+    val curId = headId(root)
     val cur = snapshotMeta(root, curId)
     val nBuckets = cur("partition_spec")("n_buckets").asInt
     // write() recomputes the same bucket transform, lands the files under
@@ -482,52 +446,43 @@ object TranscriptTable {
   def deleteConvIds(spark: SparkSession, root: String, convIds: Seq[String],
       newSnapshotId: Long): Long = {
     require(convIds.nonEmpty, "deleteConvIds: empty conv id list")
-    requireFreshSnapshot(root, newSnapshotId)
-    val curId = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
-    val cur = snapshotMeta(root, curId)
-    val nBuckets = cur("partition_spec")("n_buckets").asInt
-    val (candidates, total) = selectFilesForIds(root, curId, convIds)
-    val candPaths = candidates.map(_.path).toSet
-    val kept = manifestOf(cur).filterNot(f => candPaths(f.path))
-    // ONE read of the candidate files: the deleted-row count rides the
-    // rewrite itself via observe() (the same counters-on-the-write shape
-    // extractWithCheckpoints uses), instead of a separate count pass —
-    // halving candidate I/O (round-6 review note). The no-op refusal is
-    // checked AFTER the job but BEFORE the manifest commit: the rewrite's
-    // data dir is rolled back on refusal, so a typo'd id still never
-    // commits a snapshot.
-    val deleted = if (candidates.isEmpty) 0L else {
-      val isVictim = col("conv_id").isin(convIds: _*)
-      val obs = org.apache.spark.sql.Observation(s"graft_del_$newSnapshotId")
-      writeParquet(readFiles(spark, root, cur, candidates)
-        .observe(obs, coalesce(sum(when(isVictim, 1L).otherwise(0L)), lit(0L))
-          .as("deleted"))
-        .filter(!isVictim)
-        .repartition(math.max(1, candidates.map(_.bucket).distinct.size), col("bucket"))
-        .sortWithinPartitions("conv_id", "turn_idx"), snapDataDir(root, newSnapshotId))
-      // an all-victim rewrite lands no rows, and AQE then prunes the
-      // CollectMetrics node (the overwriteBucket lesson)
-      obs.get.get("deleted").map(_.asInstanceOf[Long]).getOrElse(
-        deletedWithoutMetrics(candidates, listDataFiles(root, newSnapshotId),
-          readFiles(spark, root, cur, candidates).filter(isVictim).count()))
-    }
-    if (deleted == 0L) {
-      // nothing committed yet (no snapshot json, current.json untouched);
-      // remove the orphan rewrite dir so the id stays usable
-      val dir = Paths.get(snapDataDir(root, newSnapshotId))
-      if (Files.isDirectory(dir)) drained(Files.walk(dir)) {
-        _.toVector.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
+    val curId = headId(root)
+    claimed(root, newSnapshotId, Some(curId)) {
+      val cur = snapshotMeta(root, curId)
+      val nBuckets = cur("partition_spec")("n_buckets").asInt
+      val (candidates, total) = selectFilesForIds(root, curId, convIds)
+      val candPaths = candidates.map(_.path).toSet
+      val kept = manifestOf(cur).filterNot(f => candPaths(f.path))
+      // ONE read of the candidate files: the deleted-row count rides the
+      // rewrite itself via observe() (the same counters-on-the-write shape
+      // extractWithCheckpoints uses), instead of a separate count pass —
+      // halving candidate I/O (round-6 review note). The no-op refusal is
+      // checked AFTER the job but BEFORE the manifest commit, so a typo'd id
+      // never commits a snapshot (and [[claimed]] rolls the rewrite back).
+      val deleted = if (candidates.isEmpty) 0L else {
+        val isVictim = col("conv_id").isin(convIds: _*)
+        val obs = org.apache.spark.sql.Observation(s"graft_del_$newSnapshotId")
+        writeParquet(readFiles(spark, root, cur, candidates)
+          .observe(obs, coalesce(sum(when(isVictim, 1L).otherwise(0L)), lit(0L))
+            .as("deleted"))
+          .filter(!isVictim)
+          .repartition(math.max(1, candidates.map(_.bucket).distinct.size), col("bucket"))
+          .sortWithinPartitions("conv_id", "turn_idx"), snapDataDir(root, newSnapshotId))
+        // an all-victim rewrite lands no rows, and AQE then prunes the
+        // CollectMetrics node (the overwriteBucket lesson)
+        obs.get.get("deleted").map(_.asInstanceOf[Long]).getOrElse(
+          deletedWithoutMetrics(candidates, listDataFiles(root, newSnapshotId),
+            readFiles(spark, root, cur, candidates).filter(isVictim).count()))
       }
+      require(deleted > 0L,
+        s"deleteConvIds: no row matches any of the ${convIds.size} conv ids " +
+          s"(checked ${candidates.size}/$total candidate files) — refusing to " +
+          "commit a no-op snapshot")
+      val newFiles = listDataFiles(root, newSnapshotId)
+      writeSnapshot(root, newSnapshotId, nBuckets, cur("schema").asString,
+        kept ++ withStats(root, newFiles), "delete", Some(curId))
+      deleted
     }
-    require(deleted > 0L,
-      s"deleteConvIds: no row matches any of the ${convIds.size} conv ids " +
-        s"(checked ${candidates.size}/$total candidate files) — refusing to " +
-        "commit a no-op snapshot")
-    val newFiles = listDataFiles(root, newSnapshotId)
-    writeSnapshot(root, newSnapshotId, nBuckets, cur("schema").asString,
-      kept ++ withStats(root, newFiles), "delete", Some(curId))
-    deleted
   }
 
   /** The delete count when the rewrite's metrics are missing: only an
@@ -590,8 +545,7 @@ object TranscriptTable {
     */
   def readConvIdRange(spark: SparkSession, root: String,
       lo: String, hi: String): DataFrame = {
-    val id = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
+    val id = headId(root)
     val (selected, _) = selectFilesForRange(root, id, lo, hi)
     readFiles(spark, root, snapshotMeta(root, id), selected)
       .filter(col("conv_id").between(lo, hi))
@@ -601,11 +555,8 @@ object TranscriptTable {
     * membership filter.
     */
   def readConvIds(spark: SparkSession, root: String,
-      convIds: Seq[String]): DataFrame = {
-    val id = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
-    readConvIdsAt(spark, root, id, convIds)
-  }
+      convIds: Seq[String]): DataFrame =
+    readConvIdsAt(spark, root, headId(root), convIds)
 
   /** [[readConvIds]] against an explicit snapshot — the time-travel point
     * lookup. Same exactness contract: pruning only skips files whose stats
@@ -624,42 +575,28 @@ object TranscriptTable {
     * references — after this, [[readAt]] on an expired id fails.
     */
   def expireSnapshots(root: String, keep: Set[Long]): Unit = {
-    val cur = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
-    require(keep.contains(cur), s"keep set must include current snapshot $cur")
-    val meta = Paths.get(root, "metadata")
     val all = snapshotIds(root)
+    val cur = all.lastOption.getOrElse(sys.error(s"no current snapshot at $root"))
+    require(keep.contains(cur), s"keep set must include current snapshot $cur")
+    val store = TableStore(root)
     val referenced = keep.flatMap(id => readManifest(root, id).map(_.path))
     all.filterNot(keep).foreach { id =>
-      listDataFiles(root, id).foreach { f =>
-        if (!referenced.contains(f.path)) {
-          val p = Paths.get(root, f.path)
-          Files.deleteIfExists(p)
-          // the local FS committer writes a checksum sibling per file;
-          // delete it too or expired buckets keep .crc litter
-          Files.deleteIfExists(p.resolveSibling("." + p.getFileName.toString + ".crc"))
-        }
-      }
-      Files.deleteIfExists(meta.resolve(s"snapshot-$id.json"))
-      // if no kept manifest references anything under this snapshot's
-      // dir, remove the whole tree — otherwise expired snapshots leave
-      // empty bucket=N dirs and _SUCCESS/.crc litter forever
+      // metadata first: a crash mid-expiry leaves unreferenced files, never
+      // a snapshot whose files are gone
+      store.delete(snapshotFile(root, id))
+      // a dir no kept manifest references goes whole (bucket dirs,
+      // _SUCCESS and .crc litter too); otherwise only its unreferenced files
       val snapRel = s"data/snap-$id"
-      if (!referenced.exists(_.startsWith(snapRel + "/"))) {
-        val dir = Paths.get(root, snapRel)
-        if (Files.isDirectory(dir)) {
-          drained(Files.walk(dir)) {
-            _.toVector.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-          }
-        }
-      }
+      if (!referenced.exists(_.startsWith(snapRel + "/"))) store.delete(s"$root/$snapRel")
+      else listDataFiles(root, id).filterNot(f => referenced(f.path))
+        .foreach(f => store.delete(s"$root/${f.path}"))
     }
   }
 
   def snapshotMeta(root: String, snapshotId: Long): Json.Value = {
-    val p = Paths.get(root, "metadata", s"snapshot-$snapshotId.json")
-    require(Files.exists(p), s"snapshot $snapshotId not found at $root")
-    Json.parse(Files.readString(p))
+    val text = TableStore(root).read(snapshotFile(root, snapshotId))
+    require(text.isDefined, s"snapshot $snapshotId not found at $root")
+    Json.parse(text.get)
   }
 
   def readManifest(root: String, snapshotId: Long): Vector[DataFile] =
@@ -673,23 +610,15 @@ object TranscriptTable {
         v.get("bytes").map(_.asLong).getOrElse(-1L))
     }
 
-  def currentSnapshotId(root: String): Option[Long] = {
-    val p = Paths.get(root, "metadata", "current.json")
-    if (!Files.exists(p)) None
-    else Json.parse(Files.readString(p)).get("current_snapshot_id").map(_.asLong)
-  }
+  /** The current snapshot: the highest committed id. */
+  def currentSnapshotId(root: String): Option[Long] = snapshotIds(root).lastOption
+  private def headId(root: String): Long =
+    currentSnapshotId(root).getOrElse(sys.error(s"no current snapshot at $root"))
 
   /** All live (unexpired) snapshot ids, ascending. */
-  def snapshotIds(root: String): Vector[Long] = {
-    val meta = Paths.get(root, "metadata")
-    if (!Files.isDirectory(meta)) Vector.empty
-    else drained(Files.list(meta)) {
-      _.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("snapshot-") && s.endsWith(".json") =>
-          s.stripPrefix("snapshot-").stripSuffix(".json").toLong }
-        .toVector
-    }.sorted
-  }
+  def snapshotIds(root: String): Vector[Long] =
+    TableStore(root).names(s"$root/metadata")
+      .collect { case SnapshotName(id) => id.toLong }.sorted
 
   // ---- metadata tables (Iceberg's `snapshots` / `files` / `history`) -----
   //
@@ -705,15 +634,15 @@ object TranscriptTable {
     * predates stats collection — never guess what you can't prove).
     */
   def snapshotsTable(spark: SparkSession, root: String): DataFrame = {
-    val cur = currentSnapshotId(root)
-    val rows = snapshotIds(root).map { id =>
+    val ids = snapshotIds(root)
+    val rows = ids.map { id =>
       val m = snapshotMeta(root, id)
-      val manifest = readManifest(root, id)
+      val manifest = manifestOf(m)
       val nRows = if (manifest.forall(_.rows >= 0L)) manifest.map(_.rows).sum else -1L
       (id, m.get("parent_snapshot_id").map(_.asLong),
         m.get("operation").map(_.asString).getOrElse("unknown"),
         m("partition_spec")("n_buckets").asInt,
-        manifest.size.toLong, nRows, cur.contains(id))
+        manifest.size.toLong, nRows, ids.lastOption.contains(id))
     }
     import spark.implicits._
     rows.toDF("snapshot_id", "parent_snapshot_id", "operation", "n_buckets",
@@ -726,8 +655,7 @@ object TranscriptTable {
     */
   def filesTable(spark: SparkSession, root: String,
       snapshotId: Option[Long] = None): DataFrame = {
-    val id = snapshotId.orElse(currentSnapshotId(root)).getOrElse(
-      sys.error(s"no current snapshot at $root (missing metadata/current.json)"))
+    val id = snapshotId.getOrElse(headId(root))
     def known(n: Long) = if (n >= 0L) Some(n) else None
     val rows = readManifest(root, id).map { f =>
       (id, f.bucket, f.path, known(f.rows), f.minConvId, f.maxConvId, known(f.bytes))
@@ -742,13 +670,12 @@ object TranscriptTable {
     * stops at an expired parent (its metadata is gone) and refuses cycles.
     */
   def historyTable(spark: SparkSession, root: String): DataFrame = {
-    val cur = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root (missing metadata/current.json)"))
+    val live = snapshotIds(root)
+    val cur = live.lastOption.getOrElse(sys.error(s"no current snapshot at $root"))
     val buf = Vector.newBuilder[(Long, Option[Long], String, Boolean)]
     val seen = scala.collection.mutable.Set.empty[Long]
     var id: Option[Long] = Some(cur)
-    while (id.exists(i =>
-        Files.exists(Paths.get(root, "metadata", s"snapshot-$i.json")))) {
+    while (id.exists(live.contains)) {
       val i = id.get
       require(seen.add(i), s"snapshot lineage cycle at $i in $root")
       val m = snapshotMeta(root, i)
@@ -761,48 +688,37 @@ object TranscriptTable {
     buf.result().toDF("snapshot_id", "parent_snapshot_id", "operation", "is_current")
   }
 
-  private def atomicWrite(path: Path, content: String): Unit = {
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
   // ---- per-partition checkpoint manifests --------------------------------
 
-  def checkpointDir(outRoot: String): Path =
-    Paths.get(outRoot, "metadata", "checkpoints")
+  private def checkpoints(outRoot: String) = s"$outRoot/metadata/checkpoints"
+  private def bucketManifest(outRoot: String, bucket: Int) =
+    s"${checkpoints(outRoot)}/bucket-$bucket.json"
 
-  def committedBuckets(outRoot: String): Set[Int] = {
-    val dir = checkpointDir(outRoot)
-    if (!Files.isDirectory(dir)) Set.empty
-    else drained(Files.list(dir)) {
-      _.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("bucket-") && s.endsWith(".json") =>
-          s.stripPrefix("bucket-").stripSuffix(".json").toInt }
-        .toSet
-    }
+  def checkpointDir(outRoot: String): java.nio.file.Path =
+    TableStore.localPath(checkpoints(outRoot))
+
+  /** bucket → its committed checkpoint manifest. Only `bucket-<b>.json`
+    * counts, not the hidden temp a commit that died before its link or
+    * rename leaves. */
+  private def bucketManifests(outRoot: String): Map[Int, Json.Value] = {
+    val store = TableStore(outRoot)
+    store.names(checkpoints(outRoot)).flatMap {
+      case BucketName(b) => store.read(bucketManifest(outRoot, b.toInt)).map(b.toInt -> Json.parse(_))
+      case _ => None
+    }.toMap
   }
+
+  def committedBuckets(outRoot: String): Set[Int] = bucketManifests(outRoot).keySet
 
   /** bucket → snapshot id recorded in its committed checkpoint manifest
-    * (the lineage field resume must validate against the current snapshot)
-    */
-  def committedBucketSnapshots(outRoot: String): Map[Int, Long] = {
-    val dir = checkpointDir(outRoot)
-    if (!Files.isDirectory(dir)) Map.empty
-    else drained(Files.list(dir)) {
-      _.map(p => p.getFileName.toString -> p)
-        .collect { case (s, p) if s.startsWith("bucket-") && s.endsWith(".json") =>
-          s.stripPrefix("bucket-").stripSuffix(".json").toInt ->
-            Json.parse(Files.readString(p))("snapshot_id").asLong }
-        .toVector.toMap
-    }
-  }
+    * (the lineage field resume must validate against the current snapshot) */
+  def committedBucketSnapshots(outRoot: String): Map[Int, Long] =
+    bucketManifests(outRoot).map { case (b, m) => b -> m("snapshot_id").asLong }
 
+  /** Commit a bucket's manifest put-if-absent: a committed bucket is never
+    * replaced (re-extraction deletes it first). */
   def commitBucket(outRoot: String, bucket: Int, snapshotId: Long,
       nBuckets: Int, c: Counters): Unit = {
-    val dir = checkpointDir(outRoot)
-    Files.createDirectories(dir)
     val manifest = Obj.of(
       "bucket" -> Num(bucket.toDouble),
       "snapshot_id" -> Num(snapshotId.toDouble),
@@ -811,27 +727,17 @@ object TranscriptTable {
         "turns_parsed" -> Num(c.turns.toDouble),
         "bytes_tokenized" -> Num(c.bytes.toDouble)),
       "complete" -> Bool(true))
-    atomicWrite(dir.resolve(s"bucket-$bucket.json"), Json.write(manifest))
+    if (!TableStore(outRoot).putIfAbsent(bucketManifest(outRoot, bucket), Json.write(manifest)))
+      throw new CommitConflict(s"bucket $bucket is already committed at $outRoot")
   }
 
-  /** Summed counters of the committed bucket manifests (fields other than
-    * turns/bytes, such as older manifests' always-zero
-    * `extraction_mismatches`, are ignored).
-    */
-  def readCounters(outRoot: String): Counters = {
-    val dir = checkpointDir(outRoot)
-    if (!Files.isDirectory(dir)) return Counters(0, 0)
-    drained(Files.list(dir)) {
-      _.filter(_.toString.endsWith(".json"))
-        .map(p => Json.parse(Files.readString(p)))
-        .foldLeft(Counters(0, 0)) { (acc, m) =>
-        val c = m("counters")
-        Counters(
-          acc.turns + c("turns_parsed").asLong,
-          acc.bytes + c("bytes_tokenized").asLong)
-        }
+  /** Summed counters of the committed bucket manifests (other fields, such
+    * as older manifests' always-zero `extraction_mismatches`, are ignored). */
+  def readCounters(outRoot: String): Counters =
+    bucketManifests(outRoot).values.foldLeft(Counters(0, 0)) { (acc, m) =>
+      val c = m("counters")
+      Counters(acc.turns + c("turns_parsed").asLong, acc.bytes + c("bytes_tokenized").asLong)
     }
-  }
 
   /** Checkpointed extraction run: reads the bucketed transcripts table,
     * extracts per bucket, writes extracted lines per bucket, and commits a
@@ -846,15 +752,14 @@ object TranscriptTable {
     * dominates extraction: ~0.3 s p50, 0.4 s p90 on a 4-core host with 8
     * jobs in flight over ~60 KB buckets (p90 0.6 s with a footer job and a
     * file per core). So `maxConcurrent` overlaps bucket jobs from a
-    * bounded driver pool (manifests are distinct files with atomic moves,
-    * so resume granularity is unchanged) and sizes each job to its share
+    * bounded driver pool (manifests are distinct put-if-absent files, so
+    * resume granularity is unchanged) and sizes each job to its share
     * of the cores.
     */
   def extractWithCheckpoints(spark: SparkSession, tableRoot: String,
       outRoot: String, nBuckets: Int, maxConcurrent: Int = 1,
       reextractStale: Boolean = false): Counters = {
-    val snapshotId = currentSnapshotId(tableRoot).getOrElse(
-      sys.error(s"no current snapshot at $tableRoot (missing metadata/current.json)"))
+    val snapshotId = headId(tableRoot)
     // buckets resolve through the current snapshot's manifest; a bucket's
     // files may span SNAPSHOT DIRS (append lands new files beside the
     // old ones), so reads go through the per-dir grouping in readFiles
@@ -885,30 +790,31 @@ object TranscriptTable {
       if (maxConcurrent <= 1 || fs.exists(_.bytes < 0)) in
       else in.coalesce(math.max(coreShare, math.ceil(fs.map(_.bytes).sum / maxBytes)).toInt)
     val processBucket = (b: Int) => {
+      // a stale manifest goes first: from here until the new one lands the
+      // bucket is uncommitted, so an interrupted re-extraction resumes it
+      if (committed.contains(b)) TableStore(outRoot).delete(bucketManifest(outRoot, b))
       val bucketFiles = byBucket.getOrElse(b, Vector.empty)
-      if (bucketFiles.isEmpty) {
-        // partitionBy writes no files for an empty bucket — commit an
-        // empty manifest so resume can progress past it
-        commitBucket(outRoot, b, snapshotId, nBuckets, Counters(0, 0))
-      } else {
-      val in = sized(readFiles(spark, tableRoot, meta, bucketFiles), bucketFiles)
-      // counters ride the write itself via observe() (SURVEY §2.5): the
-      // metrics are collected from the rows as they flow into the parquet
-      // sink, so the manifest commits in ONE output pass — the round-2
-      // read-back-and-recount doubled output I/O per bucket, which at
-      // 100x scale is real money. A task that fails after writing still
-      // doesn't commit: the manifest only lands after the job succeeds.
-      val obs = org.apache.spark.sql.Observation(s"graft_ckpt_b$b")
-      writeParquet(Pipeline.extracted(in)
-        .withColumn("n_lines", size(col("ex.lines")))
-        .withColumn("bytes", col("ex.bytes"))
-        .observe(obs, count(lit(1)).as("turns"),
-          coalesce(sum(col("bytes")), lit(0L)).as("bytes")),
-        s"$outRoot/data/bucket=$b", byBucket = false)
-      val m = obs.get
-      commitBucket(outRoot, b, snapshotId, nBuckets,
-        Counters(m("turns").asInstanceOf[Long], m("bytes").asInstanceOf[Long]))
+      // partitionBy writes no files for an empty bucket — it commits an
+      // empty manifest so resume can progress past it
+      val counters = if (bucketFiles.isEmpty) Counters(0, 0) else {
+        val in = sized(readFiles(spark, tableRoot, meta, bucketFiles), bucketFiles)
+        // counters ride the write itself via observe() (SURVEY §2.5): the
+        // metrics are collected from the rows as they flow into the parquet
+        // sink, so the manifest commits in ONE output pass — the round-2
+        // read-back-and-recount doubled output I/O per bucket, which at
+        // 100x scale is real money. A task that fails after writing still
+        // doesn't commit: the manifest only lands after the job succeeds.
+        val obs = org.apache.spark.sql.Observation(s"graft_ckpt_b$b")
+        writeParquet(Pipeline.extracted(in)
+          .withColumn("n_lines", size(col("ex.lines")))
+          .withColumn("bytes", col("ex.bytes"))
+          .observe(obs, count(lit(1)).as("turns"),
+            coalesce(sum(col("bytes")), lit(0L)).as("bytes")),
+          s"$outRoot/data/bucket=$b", byBucket = false)
+        val m = obs.get
+        Counters(m("turns").asInstanceOf[Long], m("bytes").asInstanceOf[Long])
       }
+      commitBucket(outRoot, b, snapshotId, nBuckets, counters)
     }: Unit
     // every in-flight bucket settles before a failure propagates: a
     // caller retrying extractWithCheckpoints (the documented resume flow)

@@ -7,8 +7,8 @@ import java.nio.file.{Files, Paths}
 
 /** Dev aid: dump the full Analyzer graph (scenes -> dialogs -> speakers,
   * character ranking) of a reference play as stable text, for the
-  * AnalyzerGraphSpec snapshot. Usage: runMain graft.tools.GraphDump
-  * <play.shakespeare> [out.txt]
+  * AnalyzerGraphSpec snapshot. Usage: sbt "Test/runMain graft.tools.GraphDump
+  * <play.shakespeare> [out.txt]"
   */
 object GraphDump {
   def render(a: DocAnalyzer.Analysis): String = {
