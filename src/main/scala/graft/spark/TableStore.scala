@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException => HadoopExists}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
@@ -9,14 +10,17 @@ import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import scala.util.chaining._
+import scala.util.control.NonFatal
 
 /** The metadata store of a [[TranscriptTable]]: every read, list, commit
   * and delete goes through the Hadoop `FileSystem` of the root's scheme,
   * [[LocalFs]] for `file:`, whose listings read names, kinds and lengths
   * (never owners or modes, which would fork `ls`). Commits are
   * put-if-absent: on `file:` a hard link of a finished temp file and an
-  * exclusive `mkdir`; elsewhere a check before `mkdirs` and a rename
-  * refused when the target exists (atomic where the rename is, as on HDFS).
+  * exclusive `mkdir`; elsewhere a rename only when the target is absent
+  * (atomic where rename refuses an existing target, as on HDFS) and an
+  * exclusive create of a `_claim` file (atomic where the filesystem
+  * refuses it in one step, as HDFS's NameNode does).
   */
 private[graft] final class TableStore private (fs: FileSystem, local: Boolean) {
 
@@ -46,15 +50,26 @@ private[graft] final class TableStore private (fs: FileSystem, local: Boolean) {
   /** A file (with its checksum sibling) or a whole tree. */
   def delete(path: String): Unit = fs.delete(new Path(path), true)
 
-  /** Create the dir, with the mode Hadoop's `mkdirs` gives; false if it exists. */
+  /** Claim the dir `path`: true for exactly one of any number of
+    * concurrent callers, false once it is claimed. On `file:` the claim is
+    * creating the dir (with the mode Hadoop's `mkdirs` gives), so a dir
+    * left by anyone refuses it. Elsewhere `mkdirs` also succeeds on an
+    * existing dir, so the claim is the exclusive create of its `_claim`
+    * file, and a dir a claimed write left refuses it.
+    */
   def claimDir(path: String): Boolean = {
     val p = new Path(path)
-    if (!local) return !fs.exists(p) && fs.mkdirs(p)
-    raw.mkdirs(p.getParent)
-    try Files.createDirectory(TableStore.localPath(path))
-    catch { case _: FileAlreadyExistsException => return false }
-    raw.setPermission(p, FsPermission.getDirDefault.applyUMask(FsPermission.getUMask(raw.getConf)))
-    true
+    try {
+      if (local) {
+        raw.mkdirs(p.getParent)
+        Files.createDirectory(TableStore.localPath(path))
+        raw.setPermission(p, FsPermission.getDirDefault.applyUMask(FsPermission.getUMask(raw.getConf)))
+      } else {
+        fs.mkdirs(p)
+        raw.create(new Path(p, "_claim"), false).close()
+      }
+      true
+    } catch { case _: FileAlreadyExistsException | _: HadoopExists => false }
   }
 
   /** Create the file holding `content` (written to a hidden temp sibling
@@ -68,7 +83,11 @@ private[graft] final class TableStore private (fs: FileSystem, local: Boolean) {
       if (!local) !raw.exists(dst) && raw.rename(tmp, dst)
       else try { Files.createLink(TableStore.localPath(path), TableStore.localPath(tmp.toString)); true }
       catch { case _: FileAlreadyExistsException => false }
-    } finally raw.delete(tmp, false)
+    } finally {
+      // best effort: the outcome is decided, and a temp left behind is a
+      // hidden name no listing counts
+      try raw.delete(tmp, false) catch { case NonFatal(_) => }
+    }
   }
 }
 

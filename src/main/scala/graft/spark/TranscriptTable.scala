@@ -35,15 +35,16 @@ import scala.jdk.CollectionConverters._
   *
   * Every metadata operation goes through [[TableStore]] on the root's
   * Hadoop filesystem, and every commit is put-if-absent (see [[claimed]]).
-  * A failed extraction run resumes at partition granularity: buckets with
-  * a committed checkpoint manifest are skipped.
+  * A failed extraction run resumes at partition granularity: buckets with a
+  * committed checkpoint manifest are skipped.
   */
 object TranscriptTable {
 
   final case class Counters(turns: Long, bytes: Long)
 
   /** A commit refused: its id or file is taken, or the table moved on
-    * while it was written (an IllegalArgumentException, as always). */
+    * while it was written (an IllegalArgumentException, as always).
+    */
   final class CommitConflict(message: String) extends IllegalArgumentException(message)
 
   /** One manifest entry: the bucket a data file belongs to, its path
@@ -60,15 +61,19 @@ object TranscriptTable {
 
   def bucketCol(nBuckets: Int) = pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int")
 
-  private def snapDataDir(root: String, id: Long) = s"$root/data/snap-$id"
-  private def snapshotFile(root: String, id: Long) = s"$root/metadata/snapshot-$id.json"
+  private def snapDataDir(root: String, snapshotId: Long): String =
+    s"$root/data/snap-$snapshotId"
+  private def snapshotFile(root: String, snapshotId: Long): String =
+    s"$root/metadata/snapshot-$snapshotId.json"
   private val SnapshotName = """snapshot-(\d+)\.json""".r
   private val BucketName = """bucket-(\d+)\.json""".r
 
   /** Run a write of snapshot `snapshotId` over `parent`, the current one.
-    * The id must grow past it and is claimed by creating its data dir before
-    * any data lands, so a second writer of it fails before touching the
-    * winner's files. A failure of `body` rolls the dir back (id reusable). */
+    * The id must grow past it and is claimed ([[TableStore.claimDir]])
+    * before any data lands, so a second writer of it fails before touching
+    * the winner's files. Only the writer that won the claim rolls it back,
+    * when `body` fails, so the id stays usable.
+    */
   private def claimed[A](root: String, snapshotId: Long, parent: Option[Long])(body: => A): A = {
     for (c <- parent if c >= snapshotId) throw new CommitConflict(s"snapshot $snapshotId " +
       s"is at or below the current snapshot $c at $root — snapshot ids only grow, use a new id")
@@ -95,7 +100,8 @@ object TranscriptTable {
   }
 
   /** All parquet files under a snapshot data dir, as manifest entries with
-    * root-relative paths; bucket parsed from the `bucket=N` path segment. */
+    * root-relative paths; bucket parsed from the `bucket=N` path segment.
+    */
   private def listDataFiles(root: String, snapshotId: Long): Vector[DataFile] =
     TableStore(root).files(snapDataDir(root, snapshotId), ".parquet").map { rel =>
       val dirs = rel.split('/')
@@ -151,54 +157,70 @@ object TranscriptTable {
   } catch { case _: Exception => f } // unreadable footer: keep the entry unpruned
 
   /** footer reads are independent metadata fetches — run them on a small
-    * pool so a many-file commit doesn't serialize thousands of ~1 ms opens */
+    * pool so a many-file commit doesn't serialize thousands of ~1 ms
+    * opens on the driver
+    */
   private def withStats(root: String, files: Vector[DataFile]): Vector[DataFile] = {
-    val conf = TableStore.conf // one shared, read-only Configuration
+    // the session's Hadoop conf, shared by every footer read: it names the
+    // filesystem of a root that is not `file:`, and constructing a conf per
+    // file re-parses the Hadoop default XMLs a thousand times on a big commit
+    val conf = TableStore.conf
     DriverJobs.run(if (files.length <= 4) 1 else 16,
       files.map(f => () => footerStats(root, f, conf))).toVector
   }
 
   /** Commit the snapshot file put-if-absent, refused unless the table is
     * still at `parent`: a writer that committed meanwhile, under any id,
-    * wins, and this one (inside [[claimed]]) rolls back. */
+    * wins, and this one (inside [[claimed]]) rolls back.
+    */
   private def writeSnapshot(root: String, snapshotId: Long, nBuckets: Int,
       schemaJson: String, manifest: Vector[DataFile],
-      operation: String, parent: Option[Long]): Unit = {
-    def num(n: Long): Json.Value = Num(n.toDouble)
-    def present(kvs: (String, Option[Json.Value])*) = kvs.collect { case (k, Some(v)) => k -> v }
-    val snap = Obj.of(present(
-      "snapshot_id" -> Some(num(snapshotId)),
+      operation: String = "overwrite", parent: Option[Long] = None): Unit = {
+    val snap = Obj.of(
+      Vector[(String, Json.Value)](
+      "snapshot_id" -> Num(snapshotId.toDouble),
       // lineage for incremental scans: what this snapshot DID and what it
       // grew out of (absent parent = table creation)
-      "operation" -> Some(Str(operation)),
-      "parent_snapshot_id" -> parent.map(num),
-      "format" -> Some(Str("parquet")),
-      "partition_spec" -> Some(Obj.of(
+      "operation" -> Str(operation)) ++
+      parent.map(p => "parent_snapshot_id" -> (Num(p.toDouble): Json.Value)).toVector ++
+      Vector[(String, Json.Value)](
+      "format" -> Str("parquet"),
+      "partition_spec" -> Obj.of(
         "kind" -> Str("bucket"),
         "column" -> Str("conv_id"),
         "transform" -> Str(s"pmod(xxhash64(conv_id), $nBuckets)"),
-        "n_buckets" -> num(nBuckets))),
-      "schema" -> Some(Str(schemaJson)),
-      "manifest" -> Some(Arr(manifest.map { f =>
-        val stats = f.minConvId.zip(f.maxConvId)
-        Obj.of(present("bucket" -> Some(num(f.bucket)), "path" -> Some(Str(f.path)),
-          "rows" -> Some(f.rows).filter(_ >= 0).map(num),
-          "bytes" -> Some(f.bytes).filter(_ >= 0).map(num),
-          "min_conv_id" -> stats.map(s => Str(s._1)),
-          "max_conv_id" -> stats.map(s => Str(s._2))): _*)
-      }))): _*)
+        "n_buckets" -> Num(nBuckets.toDouble)),
+      "schema" -> Str(schemaJson),
+      "manifest" -> Arr(manifest.map { f =>
+        val base = Vector[(String, Json.Value)](
+          "bucket" -> Num(f.bucket.toDouble),
+          "path" -> Str(f.path))
+        val stats: Vector[(String, Json.Value)] =
+          Vector("rows" -> f.rows, "bytes" -> f.bytes)
+            .collect { case (k, n) if n >= 0 => k -> (Num(n.toDouble): Json.Value) } ++
+          ((f.minConvId, f.maxConvId) match {
+            case (Some(mn), Some(mx)) => Vector[(String, Json.Value)](
+              "min_conv_id" -> Str(mn), "max_conv_id" -> Str(mx))
+            case _ => Vector.empty
+          })
+        Obj.of(base ++ stats: _*)
+      }.toVector)): _*)
+    val head = currentSnapshotId(root)
     def at(id: Option[Long]) = id.fold("no snapshot")(i => s"snapshot $i")
-    if (currentSnapshotId(root) != parent ||
-        !TableStore(root).putIfAbsent(snapshotFile(root, snapshotId), Json.write(snap)))
+    if (head != parent)
       throw new CommitConflict(s"snapshot $snapshotId at $root was written over " +
-        s"${at(parent)}, but another writer committed ${at(currentSnapshotId(root))} first")
+        s"${at(parent)}, but another writer committed ${at(head)} first")
+    if (!TableStore(root).putIfAbsent(snapshotFile(root, snapshotId), Json.write(snap)))
+      throw new CommitConflict(
+        s"snapshot $snapshotId already exists at $root — snapshot ids are immutable, use a new id")
   }
 
-  /** The table's one parquet write of `df` into `dir`, through [[LocalFs]]
-    * for `file:` paths (no `chmod` process per file or dir). Table data
-    * appends into the empty snapshot dir [[claimed]] made (an overwrite
-    * would delete and re-create it, reopening the claim); a checkpoint
-    * bucket's output overwrites its last try. Table data is partitioned by `bucket`, in CPU-sized row groups: a
+  /** The table's one parquet write: `df` into `dir`, through
+    * [[LocalFs]] for `file:` paths (no `chmod` process per file or dir).
+    * Table data appends into the snapshot dir [[claimed]] made (an
+    * overwrite would delete and re-create it, reopening the claim); a
+    * checkpoint bucket's output overwrites its last try.
+    * Table data is partitioned by `bucket`, in CPU-sized row groups: a
     * parquet file only splits at ROW-GROUP boundaries, so with the 128 MB
     * default one skew-heavy bucket file is ONE scan task no matter what
     * maxPartitionBytes says — measured 2.6x (salted) / 7.1x (unsalted)
@@ -294,6 +316,8 @@ object TranscriptTable {
       // propagation) so the observation map comes back EMPTY — the metrics
       // are only a best-effort dropped-rows warning below
       val newFiles = listDataFiles(root, newSnapshotId)
+      // nothing committed yet: [[claimed]] removes the orphan data dir, so
+      // the id stays usable after the caller fixes their input
       if (newFiles.isEmpty && !allowEmpty)
         sys.error(s"overwriteBucket: no input row hashes to bucket $bucket — " +
           s"refusing to silently drop the bucket from snapshot $newSnapshotId; " +
@@ -332,7 +356,8 @@ object TranscriptTable {
           pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
         .sortWithinPartitions("conv_id", "turn_idx"), snapDataDir(root, newSnapshotId))
       val newFiles = listDataFiles(root, newSnapshotId)
-      // an empty append is a caller mistake, not a new snapshot
+      // an empty append is a caller mistake, not a new snapshot; [[claimed]]
+      // removes the orphan dir so the id stays usable (as in overwriteBucket)
       if (newFiles.isEmpty)
         sys.error(s"append: no input rows — refusing to commit empty snapshot $newSnapshotId")
       writeSnapshot(root, newSnapshotId, nBuckets, cur("schema").asString,
@@ -352,7 +377,7 @@ object TranscriptTable {
     */
   def incrementalRead(spark: SparkSession, root: String,
       fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
-    val before = readManifest(root, fromSnapshotId).map(_.path).toSet // must exist
+    snapshotMeta(root, fromSnapshotId) // must exist
     var id = toSnapshotId
     while (id != fromSnapshotId) {
       val m = snapshotMeta(root, id)
@@ -364,6 +389,7 @@ object TranscriptTable {
         sys.error(s"snapshot lineage from $toSnapshotId never reaches " +
           s"$fromSnapshotId (chain breaks at $id)"))
     }
+    val before = readManifest(root, fromSnapshotId).map(_.path).toSet
     val to = snapshotMeta(root, toSnapshotId)
     readFiles(spark, root, to, manifestOf(to).filterNot(f => before(f.path)))
   }
@@ -699,7 +725,8 @@ object TranscriptTable {
 
   /** bucket → its committed checkpoint manifest. Only `bucket-<b>.json`
     * counts, not the hidden temp a commit that died before its link or
-    * rename leaves. */
+    * rename leaves.
+    */
   private def bucketManifests(outRoot: String): Map[Int, Json.Value] = {
     val store = TableStore(outRoot)
     store.names(checkpoints(outRoot)).flatMap {
@@ -711,12 +738,14 @@ object TranscriptTable {
   def committedBuckets(outRoot: String): Set[Int] = bucketManifests(outRoot).keySet
 
   /** bucket → snapshot id recorded in its committed checkpoint manifest
-    * (the lineage field resume must validate against the current snapshot) */
+    * (the lineage field resume must validate against the current snapshot)
+    */
   def committedBucketSnapshots(outRoot: String): Map[Int, Long] =
     bucketManifests(outRoot).map { case (b, m) => b -> m("snapshot_id").asLong }
 
   /** Commit a bucket's manifest put-if-absent: a committed bucket is never
-    * replaced (re-extraction deletes it first). */
+    * replaced (re-extraction deletes it first).
+    */
   def commitBucket(outRoot: String, bucket: Int, snapshotId: Long,
       nBuckets: Int, c: Counters): Unit = {
     val manifest = Obj.of(
@@ -731,12 +760,16 @@ object TranscriptTable {
       throw new CommitConflict(s"bucket $bucket is already committed at $outRoot")
   }
 
-  /** Summed counters of the committed bucket manifests (other fields, such
-    * as older manifests' always-zero `extraction_mismatches`, are ignored). */
+  /** Summed counters of the committed bucket manifests (fields other than
+    * turns/bytes, such as older manifests' always-zero
+    * `extraction_mismatches`, are ignored).
+    */
   def readCounters(outRoot: String): Counters =
     bucketManifests(outRoot).values.foldLeft(Counters(0, 0)) { (acc, m) =>
       val c = m("counters")
-      Counters(acc.turns + c("turns_parsed").asLong, acc.bytes + c("bytes_tokenized").asLong)
+      Counters(
+        acc.turns + c("turns_parsed").asLong,
+        acc.bytes + c("bytes_tokenized").asLong)
     }
 
   /** Checkpointed extraction run: reads the bucketed transcripts table,
@@ -794,27 +827,29 @@ object TranscriptTable {
       // bucket is uncommitted, so an interrupted re-extraction resumes it
       if (committed.contains(b)) TableStore(outRoot).delete(bucketManifest(outRoot, b))
       val bucketFiles = byBucket.getOrElse(b, Vector.empty)
-      // partitionBy writes no files for an empty bucket — it commits an
-      // empty manifest so resume can progress past it
-      val counters = if (bucketFiles.isEmpty) Counters(0, 0) else {
-        val in = sized(readFiles(spark, tableRoot, meta, bucketFiles), bucketFiles)
-        // counters ride the write itself via observe() (SURVEY §2.5): the
-        // metrics are collected from the rows as they flow into the parquet
-        // sink, so the manifest commits in ONE output pass — the round-2
-        // read-back-and-recount doubled output I/O per bucket, which at
-        // 100x scale is real money. A task that fails after writing still
-        // doesn't commit: the manifest only lands after the job succeeds.
-        val obs = org.apache.spark.sql.Observation(s"graft_ckpt_b$b")
-        writeParquet(Pipeline.extracted(in)
-          .withColumn("n_lines", size(col("ex.lines")))
-          .withColumn("bytes", col("ex.bytes"))
-          .observe(obs, count(lit(1)).as("turns"),
-            coalesce(sum(col("bytes")), lit(0L)).as("bytes")),
-          s"$outRoot/data/bucket=$b", byBucket = false)
-        val m = obs.get
-        Counters(m("turns").asInstanceOf[Long], m("bytes").asInstanceOf[Long])
+      if (bucketFiles.isEmpty) {
+        // partitionBy writes no files for an empty bucket — commit an
+        // empty manifest so resume can progress past it
+        commitBucket(outRoot, b, snapshotId, nBuckets, Counters(0, 0))
+      } else {
+      val in = sized(readFiles(spark, tableRoot, meta, bucketFiles), bucketFiles)
+      // counters ride the write itself via observe() (SURVEY §2.5): the
+      // metrics are collected from the rows as they flow into the parquet
+      // sink, so the manifest commits in ONE output pass — the round-2
+      // read-back-and-recount doubled output I/O per bucket, which at
+      // 100x scale is real money. A task that fails after writing still
+      // doesn't commit: the manifest only lands after the job succeeds.
+      val obs = org.apache.spark.sql.Observation(s"graft_ckpt_b$b")
+      writeParquet(Pipeline.extracted(in)
+        .withColumn("n_lines", size(col("ex.lines")))
+        .withColumn("bytes", col("ex.bytes"))
+        .observe(obs, count(lit(1)).as("turns"),
+          coalesce(sum(col("bytes")), lit(0L)).as("bytes")),
+        s"$outRoot/data/bucket=$b", byBucket = false)
+      val m = obs.get
+      commitBucket(outRoot, b, snapshotId, nBuckets,
+        Counters(m("turns").asInstanceOf[Long], m("bytes").asInstanceOf[Long]))
       }
-      commitBucket(outRoot, b, snapshotId, nBuckets, counters)
     }: Unit
     // every in-flight bucket settles before a failure propagates: a
     // caller retrying extractWithCheckpoints (the documented resume flow)

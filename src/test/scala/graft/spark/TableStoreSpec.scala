@@ -4,25 +4,76 @@ import graft.SparkEntry
 import graft.spark.TranscriptTable.CommitConflict
 import graft.util.Json
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.net.URI
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, CyclicBarrier, TimeUnit}
+import java.util.concurrent.{BrokenBarrierException, CountDownLatch, CyclicBarrier, TimeUnit,
+  TimeoutException}
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 /** `file:` storage under the `graftfs:` scheme. `java.nio` cannot resolve
   * a `graftfs:` path, so a table there works only if every metadata
-  * operation goes through Hadoop.
+  * operation goes through Hadoop. An exclusive create (`overwrite` false)
+  * is refused in one step when the file exists, as HDFS's NameNode refuses
+  * it (`RawLocalFileSystem` checks, then opens). [[GraftFs.holdMkdirs]]
+  * stops the first callers of `mkdirs` on one dir name until all of them
+  * arrived: the interleaving that lets every caller through a claim that
+  * checks for the dir and then makes it.
   */
 class GraftFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("graftfs:///")
   override def getScheme: String = "graftfs"
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    if (!overwrite) createExclusive(f)
+    super.create(f, true, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    if (!overwrite) createExclusive(f)
+    super.create(f, permission, true, bufferSize, replication, blockSize, progress)
+  }
+
+  private def createExclusive(f: Path): Unit = {
+    mkdirs(f.getParent)
+    try Files.createFile(pathToFile(f).toPath)
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"File already exists: $f")
+    }
+  }
+
+  override def mkdirs(f: Path): Boolean = {
+    GraftFs.gate(f.getName)
+    super.mkdirs(f)
+  }
+}
+
+object GraftFs {
+  @volatile private var held: Option[(String, CyclicBarrier)] = None
+
+  /** Hold the next `parties` calls of `mkdirs` on a dir named `name` until
+    * all have arrived (30 s at most), once.
+    */
+  def holdMkdirs(name: String, parties: Int): Unit =
+    held = Some(name -> new CyclicBarrier(parties, () => held = None))
+
+  private def gate(name: String): Unit = held match {
+    case Some((n, barrier)) if n == name =>
+      try barrier.await(30, TimeUnit.SECONDS)
+      catch { case _: TimeoutException | _: BrokenBarrierException => }
+    case _ =>
+  }
 }
 
 /** Holds the first row through it until released: a writer stalled in its
@@ -97,9 +148,12 @@ class TableStoreSpec extends AnyFunSuite {
     assert(TranscriptTable.committedBuckets(out) == (0 until nBuckets).toSet)
   }
 
-  test("two writers of one snapshot id: exactly one commits, the loser leaves no data") {
+  /** Two threads append snapshot 2 to a new table at `root` (`local`: the
+    * same dir as a `java.nio` path) at once: exactly one commits, the other
+    * throws [[CommitConflict]] and leaves no file behind.
+    */
+  private def sameIdRace(root: String, local: String): Unit = {
     val sp = spark
-    val root = tmp("race")
     TranscriptTable.write(convs(8, 71L), root, nBuckets = 4, snapshotId = 1L, filesPerBucket = 1)
     val batches = Seq(convs(6, 72L), convs(6, 73L))
     val barrier = new CyclicBarrier(2)
@@ -117,21 +171,35 @@ class TableStoreSpec extends AnyFunSuite {
     assert(TranscriptTable.currentSnapshotId(root).contains(2L))
     assert(keys(TranscriptTable.incrementalRead(sp, root, 1L, 2L)) == keys(winner))
     // every data file under the id's dir is the winner's: in its manifest
-    val manifest2 = TranscriptTable.readManifest(root, 2L).map(f => s"$root/${f.path}").toSet
-    assert(parquetUnder(s"$root/data/snap-2") == manifest2.filter(_.contains("/snap-2/")))
+    val manifest2 = TranscriptTable.readManifest(root, 2L).map(f => s"$local/${f.path}").toSet
+    assert(parquetUnder(s"$local/data/snap-2") == manifest2.filter(_.contains("/snap-2/")))
     // a commit at or below the current id is refused, and touches nothing
     Seq(2L, 1L).foreach { id =>
       val e = intercept[CommitConflict](TranscriptTable.append(loser, root, id, filesPerBucket = 1))
       assert(e.getMessage.contains("at or below the current snapshot 2"), e.getMessage)
     }
-    assert(TranscriptTable.readManifest(root, 2L).map(f => s"$root/${f.path}").toSet == manifest2)
+    assert(TranscriptTable.readManifest(root, 2L).map(f => s"$local/${f.path}").toSet == manifest2)
+    assert(parquetUnder(s"$local/data/snap-2") == manifest2.filter(_.contains("/snap-2/")))
     assert(TranscriptTable.read(sp, root).count() == convs(8, 71L).count() + winner.count())
+  }
+
+  test("two writers of one snapshot id: exactly one commits, the loser leaves no data") {
+    val root = tmp("race")
+    sameIdRace(root, root)
     // a checkpoint manifest is put-if-absent too
     val out = tmp("race_out")
     TranscriptTable.commitBucket(out, 0, 2L, 4, TranscriptTable.Counters(1, 1))
     intercept[CommitConflict](
       TranscriptTable.commitBucket(out, 0, 2L, 4, TranscriptTable.Counters(2, 2)))
     assert(TranscriptTable.readCounters(out) == TranscriptTable.Counters(1, 1))
+  }
+
+  test("two writers of one snapshot id under another Hadoop scheme: the claim is exclusive") {
+    spark.sparkContext.hadoopConfiguration.set("fs.graftfs.impl", classOf[GraftFs].getName)
+    val local = tmp("scheme_race")
+    // both writers are inside their claim before either makes the dir
+    GraftFs.holdMkdirs("snap-2", 2)
+    sameIdRace("graftfs://" + local, local)
   }
 
   test("a writer the table moved past while its data landed loses at commit and rolls back") {
